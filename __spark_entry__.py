@@ -9860,85 +9860,6 @@ _PRIORITY: list[str] = [
 ]
 
 
-_PRIORITY_R13: list[str] = [
-    # Round-13 window, kept for the record (VERDICT r12 task 1).
-    # Slots 1-4 =
-    # the queries with NO full-oracle driver row yet: agg_group_approx
-    # (PROMOTED this round from rows-only to a deterministic-BOUND
-    # oracle — exact replayed quantities + sketch-within-bound
-    # booleans the oracle pins TRUE), model_predict_multi_view
-    # (NEW this round — read-time serving of a model whose inputs
-    # span two views, exceeding the reference), and
-    # splits_leakage_safe (NEW this round — near-dup-component-aware
-    # train/test split, no group straddles the boundary) plus
-    # join_interval_overlap_count (NEW — the pair join's pair-free
-    # counting twin). Slots 5-8 =
-    # rows FORCE-INCLUDED because round 13 touched their code paths:
-    # the pq ADC oracle (pq_topk_int id-dtype derivation + per-run
-    # artifact namespacing), the ivf probe oracle (same namespacing),
-    # and the rolling + iceberg-stream IVM rows (single-maintainer
-    # LEASE now taken at refresh/stream start). Slots 9-42 = the 34
-    # r8-stale rows the judge enumerated (the oldest cohort). Slots
-    # 43-50 = the 8 alphabetically-first r9 rows. After this window
-    # no full-oracle query's last green driver row is older than r9
-    # — the verdict's criterion; the remaining r9 rows head the r14
-    # rotation.
-    "agg_group_approx",
-    "model_predict_multi_view",
-    "splits_leakage_safe",
-    "join_interval_overlap_count",
-    # --- code paths touched in r13 (4) ---
-    "vector_index_pq_adc",
-    "vector_index_ivf_probe",
-    "store_incremental_aggregate_rolling",
-    "store_incremental_aggregate_iceberg_stream",
-    # --- r8-stale cohort (34) ---
-    "dedup_simhash",
-    "dedup_substring_spans",
-    "events_global_row_ids",
-    "events_lag_features",
-    "events_pivot",
-    "events_resample",
-    "events_session_window",
-    "join_asof_bucketed",
-    "join_asof_bucketed_nearest",
-    "join_asof_forward",
-    "join_asof_nearest",
-    "join_fuzzy_blocked",
-    "join_pit_ttl",
-    "sim_lsh_pairs",
-    "sim_topk_matmul",
-    "source_delta_cdf_replace",
-    "source_in_memory",
-    "splits_stratified",
-    "splits_train",
-    "store_features_for",
-    "stream_interval_join_batch",
-    "stream_table_source",
-    "text_bigram_surprise",
-    "text_decontaminate_fuzzy",
-    "text_dup_ngram_chars",
-    "text_inverted_index",
-    "text_quality_classifier",
-    "text_token_entropy",
-    "tpch_q1",
-    "tpch_q13",
-    "tpch_q2",
-    "tpch_q20",
-    "tpch_q21",
-    "tpch_q22",
-    # --- r9 cohort: 8 alphabetically-first of the rest ---
-    "agg_group_stats",
-    "agg_percentiles_counting",
-    "agg_rolling_window",
-    "agg_top_frequent",
-    "corpus_collapse_rare",
-    "corpus_jsd_slices",
-    "corpus_pack_wordpiece",
-    "corpus_shrunk_domain_means",
-]
-
-
 def _ordered(d: dict) -> dict:
     missing = [n for n in _PRIORITY if n not in _QUERIES]
     if missing:  # typo guard — fail loudly at call time

@@ -197,22 +197,30 @@ def attach_blooms(
     schema: Any,
     n_partition_cols: int,
     fpp: float = DEFAULT_FPP,
+    data_dir: str = "",
+    header: bool = False,
 ) -> None:
-    """Decorate staged ``add`` actions with ``bloomFilters`` refs for
-    every indexed column present in the data files (partition columns
-    are identity-pruned already and never indexed)."""
-    from aligned_spark.sources.delta_log import DeltaLog
+    """Decorate staged ``add`` actions (``path`` + ``stats``) with
+    ``bloomFilters`` refs for every indexed column present in the
+    data files (partition columns are identity-pruned already and
+    never indexed). ``data_dir`` is the tables' data directory under
+    ``table_path``; ``header=True`` writes self-describing sidecars
+    for formats whose metadata cannot carry the refs."""
+    from aligned_spark.sources.table_log import TableLog
 
     file_names = {f.name for f in schema.fields} if schema else set()
     cols = [c for c in columns if c in file_names]
     if not cols or not adds:
         return
     paths = [os.path.join(table_path, a["path"]) for a in adds]
-    reader = spark.read.option("basePath", table_path)
+    reader = spark.read.option(
+        "basePath", os.path.join(table_path, data_dir).rstrip("/")
+    )
     if schema is not None:
         reader = reader.schema(schema)
     df = reader.parquet(*sorted(paths)).withColumn(
-        "__file", DeltaLog._rel_file_col(n_partition_cols)
+        "__file",
+        TableLog._rel_file_col(n_partition_cols, int(bool(data_dir))),
     )
     if not 0.0 < fpp < 1.0:
         raise ValueError(
@@ -228,7 +236,9 @@ def attach_blooms(
         if nr:
             n_by_file[a["path"]] = int(nr)
     for c in cols:
-        built = build_sidecars(df, table_path, c, n_by_file, fpp)
+        built = build_sidecars(
+            df, table_path, c, n_by_file, fpp, header=header
+        )
         for a in adds:
             meta = built.get(a["path"])
             if meta is not None:

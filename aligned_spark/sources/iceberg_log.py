@@ -54,24 +54,17 @@ import re
 import time
 import uuid
 from collections import OrderedDict
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, replace
 from typing import Any
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from aligned_spark.sources.avro_io import read_container, write_container
-from aligned_spark.sources.delta_log import (
-    CHANGE_DATA_BYTES_LARGE_PROP,
-    CHANGE_DATA_BYTES_LARGE_THRESHOLD,
-    CHANGE_DATA_BYTES_PROP,
-    CHANGE_DATA_BYTES_THRESHOLD,
-    CHANGE_DATA_FILE_THRESHOLD,
-    CHANGE_DATA_THRESHOLD_PROP,
-    ConcurrentCommitError,
-)
+from aligned_spark.sources.log_store import ConcurrentCommitError
 from aligned_spark.sources.parts import StagedPart, stage_parquet_parts
+from aligned_spark.sources.table_log import TableLog
 
 _VERSION_RE = re.compile(r"^v(\d+)\.metadata\.json$")
 # process-local marker: the metadata version a snapshot was read at;
@@ -354,7 +347,7 @@ def _iceberg_file_may_match(
     """Sound manifest-level data skipping: True unless the entry's
     ``lower_bounds``/``upper_bounds`` PROVE the file cannot contain a
     matching row. Identity-partition values participate as exact
-    min=max bounds. Mirrors ``delta_log._file_may_match``."""
+    min=max bounds."""
     def decode(raw_list) -> dict[str, Any]:
         out: dict[str, Any] = {}
         for kv in raw_list or []:
@@ -495,7 +488,10 @@ class IcebergSnapshotView:
     ``delete_files`` are v2 POSITION-DELETE parquet files
     (``file_path``/``pos`` rows, the spec's merge-on-read encoding);
     a read anti-joins them against the data scan's
-    ``_metadata`` (file, row_index) pairs."""
+    ``_metadata`` (file, row_index) pairs. ``metadata`` is the table
+    metadata the view was resolved from — what a commit built on the
+    view extends. File entries are the manifests' ``data_file``
+    records, shared with the manifest cache and read-only."""
 
     snapshot_id: int
     schema: T.StructType
@@ -504,6 +500,7 @@ class IcebergSnapshotView:
     delete_files: dict[str, dict[str, Any]] = field(
         default_factory=dict
     )
+    metadata: dict[str, Any] = field(default_factory=dict)
 
 
 #: Process-wide LRU of PARSED manifest metadata, keyed on
@@ -522,10 +519,35 @@ _MANIFEST_CACHE: "OrderedDict[tuple, list]" = OrderedDict()
 _MANIFEST_CACHE_MAX = 512
 
 
+class _FrozenRecord(dict):
+    """A parsed manifest record: a dict that refuses mutation. The
+    cache shares records process-wide and every resolved view reads
+    them, so an in-place edit would silently corrupt every later
+    snapshot of the table. Pickles and copies as a plain dict."""
+
+    def _readonly(self, *args, **kwargs):
+        raise TypeError("cached manifest records are read-only")
+
+    __setitem__ = __delitem__ = __ior__ = _readonly
+    clear = pop = popitem = setdefault = update = _readonly
+
+    def __reduce__(self):
+        return dict, (dict(self),)
+
+
+def _freeze(value: Any) -> Any:
+    if isinstance(value, dict):
+        return _FrozenRecord((k, _freeze(v)) for k, v in value.items())
+    if isinstance(value, list):
+        return tuple(_freeze(v) for v in value)
+    return value
+
+
 def _read_manifest_cached(path: str) -> list:
     """Avro records of one manifest/manifest-list file, via the
-    process-wide LRU. Callers must not mutate the returned list or
-    its records."""
+    process-wide LRU. Cached records are frozen (read-only dicts,
+    tuples for arrays): a caller's edit raises instead of leaking
+    into every later resolve."""
     try:
         st = os.stat(path)
         key = (path, st.st_size, st.st_mtime_ns)
@@ -537,16 +559,23 @@ def _read_manifest_cached(path: str) -> list:
     if hit is not None:
         _MANIFEST_CACHE.move_to_end(key)
         return hit
-    _, records = read_container(path)
+    records = _freeze(read_container(path)[1])
     _MANIFEST_CACHE[key] = records
     while len(_MANIFEST_CACHE) > _MANIFEST_CACHE_MAX:
         _MANIFEST_CACHE.popitem(last=False)
     return records
 
 
+def _snapshot_entry(md: dict[str, Any], snapshot_id: int) -> dict[str, Any]:
+    return next(
+        s for s in md["snapshots"] if s["snapshot-id"] == snapshot_id
+    )
+
+
 @dataclass
-class IcebergLog:
-    """Reader/writer for one Iceberg v1 table directory."""
+class IcebergLog(TableLog):
+    """Reader/writer for one Iceberg v1 table directory — the Iceberg
+    codec of :class:`~aligned_spark.sources.table_log.TableLog`."""
 
     table_path: str
     #: commit-coordination backend for the VERSION FILES only
@@ -558,6 +587,14 @@ class IcebergLog:
     #: :class:`~aligned_spark.sources.log_store.S3LogStore` to get
     #: conditional-put (``IfNoneMatch="*"``) commit atomicity on S3.
     commit_store: Any | None = None
+
+    _MERGE_KEYS_PROP = _MERGE_KEYS_PROP
+    #: Iceberg has no spec-level CHECK; constraints ride the table
+    #: properties under this prefix
+    _CONSTRAINT_PFX = "aligned.constraints."
+    _DATA_DIR = "data"
+    _SCHEMA_ORDER_SCAN = True
+    _BLOOM_HEADER = True
 
     # -------------------------------------------------------- layout
 
@@ -859,7 +896,9 @@ class IcebergLog:
         if snap is None:
             if snapshot_id is not None:
                 raise ValueError(f"unknown snapshot id {snapshot_id}")
-            return IcebergSnapshotView(-1, schema, part_cols, {})
+            return IcebergSnapshotView(
+                -1, schema, part_cols, {}, metadata=md
+            )
         manifests = _read_manifest_cached(
             os.path.join(self.table_path, snap["manifest-list"])
         )
@@ -878,12 +917,12 @@ class IcebergLog:
                 else:
                     target[e["data_file"]["file_path"]] = e["data_file"]
         return IcebergSnapshotView(
-            sid, schema, part_cols, files, delete_files
+            sid, schema, part_cols, files, delete_files, md
         )
 
     def _manifests_of(self, snapshot: dict[str, Any]) -> list[dict]:
         # fresh list: callers may extend it; the records stay shared
-        # with the cache and are treated as immutable everywhere
+        # with the cache (frozen)
         return list(
             _read_manifest_cached(
                 os.path.join(
@@ -892,325 +931,7 @@ class IcebergLog:
             )
         )
 
-    # ------------------------------------------- merge-on-read scans
-
-    #: table-relative path of the file a row came from: the last
-    #: (1 + n_partition_cols + 1-for-'data') URI segments of the
-    #: scan's ``_metadata.file_path``, %XX-decoded — segment
-    #: counting, not prefix/anchor matching, so a TABLE path that
-    #: itself contains '/data/', spaces, or symlink divergence can't
-    #: corrupt the derivation (shared rule:
-    #: :meth:`DeltaLog._rel_file_col`).
-    @staticmethod
-    def _rel_file_col(n_partition_cols: int):
-        from aligned_spark.sources.delta_log import DeltaLog
-
-        return DeltaLog._rel_file_col(n_partition_cols, data_subdir=1)
-
-    def _delete_pairs(
-        self,
-        spark: SparkSession,
-        view: IcebergSnapshotView,
-        rels: list[str] | None = None,
-    ) -> DataFrame | None:
-        """(file_path, pos) rows of the snapshot's position-delete
-        files, optionally restricted to the data files actually being
-        scanned. None when the snapshot carries no deletes."""
-        if not view.delete_files:
-            return None
-        pairs = spark.read.schema("file_path string, pos long").parquet(
-            *[
-                os.path.join(self.table_path, p)
-                for p in sorted(view.delete_files)
-            ]
-        )
-        if rels is not None:
-            pairs = pairs.filter(F.col("file_path").isin(rels))
-        return pairs
-
-    def _scan(
-        self,
-        spark: SparkSession,
-        view: IcebergSnapshotView,
-        rels: list[str] | None = None,
-        keep_meta: bool = False,
-    ) -> DataFrame:
-        """Plan a read of ``rels`` (default: all live data files)
-        with the snapshot's position deletes APPLIED: the data scan
-        carries (file, row_index) from ``_metadata`` and anti-joins
-        the delete pairs — AQE broadcasts the (small) delete side.
-        ``keep_meta=True`` keeps ``__file``/``__pos`` columns for
-        callers that need row positions (the MOR writers)."""
-        rels = sorted(view.files) if rels is None else sorted(rels)
-        cols = [f.name for f in view.schema.fields]
-        if not rels:
-            df = spark.createDataFrame([], view.schema)
-            if keep_meta:
-                df = df.withColumn(
-                    "__file", F.lit(None).cast("string")
-                ).withColumn("__pos", F.lit(None).cast("long"))
-            return df
-        df = (
-            spark.read.schema(view.schema)
-            .option("basePath", os.path.join(self.table_path, "data"))
-            .parquet(*[os.path.join(self.table_path, p) for p in rels])
-        )
-        pairs = self._delete_pairs(spark, view, rels)
-        if pairs is None and not keep_meta:
-            return df.select(*cols)
-        df = df.withColumn(
-            "__file",
-            self._rel_file_col(len(view.partition_columns)),
-        ).withColumn(
-            "__pos", F.col("_metadata.row_index")
-        )
-        if pairs is not None:
-            df = df.join(
-                pairs.withColumnRenamed("file_path", "__file")
-                .withColumnRenamed("pos", "__pos"),
-                ["__file", "__pos"],
-                "left_anti",
-            )
-        return df if keep_meta else df.select(*cols)
-
-    # ------------------------------------------- CHECK constraints
-
-    _CONSTRAINT_PFX = "aligned.constraints."
-
-    def constraints(self) -> dict[str, str]:
-        """Write-validation constraints carried in the table
-        PROPERTIES (Iceberg has no spec-level CHECK; engines layer
-        validation on properties — same posture here, mirroring
-        :meth:`DeltaLog.constraints`)."""
-        props = self.current_metadata().get("properties", {}) or {}
-        p = self._CONSTRAINT_PFX
-        return {
-            k[len(p):]: v for k, v in props.items() if k.startswith(p)
-        }
-
-    def add_constraint(
-        self, spark: SparkSession, name: str, expr_sql: str
-    ) -> int:
-        """Existing rows must already satisfy the expression (one
-        validation scan), then the constraint rides the metadata and
-        every future write validates against it."""
-        bad = self.read(spark).filter(
-            ~F.coalesce(F.expr(expr_sql), F.lit(False))
-        )
-        n = bad.count()
-        if n:
-            raise ValueError(
-                f"cannot add constraint {name!r}: {n} existing "
-                f"row(s) violate ({expr_sql})"
-            )
-        md = self.current_metadata()
-        new_md = dict(md)
-        new_md["properties"] = {
-            **(md.get("properties") or {}),
-            f"{self._CONSTRAINT_PFX}{name}": expr_sql,
-        }
-        self._commit_metadata(new_md, md[_READ_VERSION_KEY] + 1)
-        return md[_READ_VERSION_KEY] + 1
-
-    def drop_constraint(self, name: str) -> int:
-        md = self.current_metadata()
-        props = dict(md.get("properties") or {})
-        if props.pop(f"{self._CONSTRAINT_PFX}{name}", None) is None:
-            raise ValueError(f"no such constraint: {name}")
-        new_md = dict(md)
-        new_md["properties"] = props
-        self._commit_metadata(new_md, md[_READ_VERSION_KEY] + 1)
-        return md[_READ_VERSION_KEY] + 1
-
-    def _enforce_constraints(
-        self, df: DataFrame, md: dict[str, Any]
-    ) -> None:
-        props = md.get("properties", {}) or {}
-        p = self._CONSTRAINT_PFX
-        checks = [
-            (k[len(p):], v) for k, v in props.items() if k.startswith(p)
-        ]
-        if not checks:
-            return
-        pred = None
-        for _, expr_sql in checks:
-            ok = F.coalesce(F.expr(expr_sql), F.lit(False))
-            pred = ok if pred is None else (pred & ok)
-        if not df.filter(~pred).isEmpty():
-            names = ", ".join(n for n, _ in checks)
-            raise ValueError(
-                f"write violates CHECK constraint(s) [{names}] on "
-                f"{self.table_path}"
-            )
-
-    # ------------------------------------------------ bloom sidecars
-
-    def set_properties(self, props: dict[str, Any]) -> int:
-        """Merge ``props`` into the table properties in one metadata
-        commit (None unsets) — :meth:`DeltaLog.set_properties`
-        parity; e.g. the ``aligned.changeData.*`` thresholds."""
-        md = self.current_metadata()
-        cur = dict(md.get("properties") or {})
-        for k, val in props.items():
-            if val is None:
-                cur.pop(k, None)
-            else:
-                cur[k] = str(val)
-        new_md = dict(md)
-        new_md["properties"] = cur
-        self._commit_metadata(new_md, md[_READ_VERSION_KEY] + 1)
-        return md[_READ_VERSION_KEY] + 1
-
-    def set_bloom_filter(
-        self, columns: list[str], fpp: float | None = None
-    ) -> int:
-        """Opt columns into per-part bloom sidecars — the Iceberg
-        parity of :meth:`DeltaLog.set_bloom_filter` (same
-        ``aligned.bloomFilter`` key, carried in the table PROPERTIES;
-        same sizing math, :mod:`aligned_spark.sources.bloom`). Parts
-        staged from now on get SELF-DESCRIBING sidecars (the Avro
-        manifest-entry schema is fixed, so refs ride a tiny file
-        header instead of metadata); run :meth:`optimize` to index
-        existing data."""
-        import json as _json
-
-        from aligned_spark.sources.bloom import BLOOM_PROP
-
-        if fpp is not None and not 0.0 < fpp < 1.0:
-            raise ValueError(
-                f"bloom fpp must be in (0, 1), got {fpp!r}"
-            )
-        md = self.current_metadata()
-        props = dict(md.get("properties") or {})
-        if columns:
-            spec: dict[str, Any] = {"columns": sorted(columns)}
-            if fpp is not None:
-                spec["fpp"] = fpp
-            props[BLOOM_PROP] = _json.dumps(spec)
-        else:
-            props.pop(BLOOM_PROP, None)
-        new_md = dict(md)
-        new_md["properties"] = props
-        self._commit_metadata(new_md, md[_READ_VERSION_KEY] + 1)
-        return md[_READ_VERSION_KEY] + 1
-
-    def _bloom_config(
-        self, md: dict[str, Any]
-    ) -> tuple[list[str], float]:
-        from aligned_spark.sources.bloom import bloom_config_of
-
-        return bloom_config_of(
-            {"configuration": md.get("properties") or {}}
-        )
-
-    def _attach_blooms(
-        self,
-        df: DataFrame,
-        parts: list[Any],
-        part_cols: list[str],
-        md: dict[str, Any],
-    ) -> None:
-        """Build self-describing bloom sidecars for freshly staged
-        parts (one distributed job per indexed column over ONLY those
-        parts — the delta builder with ``header=True``). Pre-property
-        parts simply have no sidecar and stay unprunable (sound)."""
-        from aligned_spark.sources.bloom import build_sidecars
-
-        cols, fpp = self._bloom_config(md)
-        if not cols or not parts:
-            return
-        pset = set(part_cols or [])
-        file_schema = T.StructType(
-            [
-                f
-                for f in _schema_to_spark(md["schema"]).fields
-                if f.name not in pset
-            ]
-        )
-        cols = [c for c in cols if c in file_schema.fieldNames()]
-        if not cols:
-            return
-        spark = df.sparkSession
-        scan = (
-            spark.read.schema(file_schema)
-            .option(
-                "basePath", os.path.join(self.table_path, "data")
-            )
-            .parquet(
-                *sorted(
-                    os.path.join(self.table_path, p.path)
-                    for p in parts
-                )
-            )
-            .withColumn(
-                "__file", self._rel_file_col(len(pset))
-            )
-        )
-        n_by_file = {}
-        for p in parts:
-            nr = (p.stats or {}).get("numRecords")
-            if nr:
-                n_by_file[p.path] = int(nr)
-        for c in cols:
-            build_sidecars(
-                scan, self.table_path, c, n_by_file, fpp, header=True
-            )
-
-    def _bloom_prune(
-        self,
-        spark: SparkSession,
-        view: IcebergSnapshotView,
-        md: dict[str, Any],
-        paths: list[str],
-        predicates: list[tuple[str, str, Any]],
-    ) -> list[str]:
-        """Drop candidates whose (convention-addressed,
-        self-describing) sidecar PROVES no equality-predicate value
-        is present — :meth:`DeltaLog._bloom_prune` with file-header
-        metadata instead of add-action refs. Sound superset: files
-        without a sidecar always survive."""
-        from aligned_spark.sources import bloom as B
-
-        eq = [(c, v) for c, op, v in predicates if op == "="]
-        cols, _ = self._bloom_config(md)
-        eq = [(c, v) for c, v in eq if c in cols]
-        if not eq or not paths:
-            return paths
-        types = {
-            f.name: f.dataType
-            for f in _schema_to_spark(md["schema"]).fields
-        }
-        eq = [(c, v) for c, v in eq if c in types]
-        if not eq:
-            return paths
-        probe = spark.range(1).select(
-            *[
-                x
-                for c, v in eq
-                for x in B.hash_pair_lit(c, v, types[c])
-            ]
-        ).first()
-        import numpy as np
-
-        out = []
-        for p in paths:
-            keep = True
-            for i, (c, _) in enumerate(eq):
-                h1, h2 = probe[2 * i], probe[2 * i + 1]
-                if h1 is None:
-                    continue  # null literal — bloom can't speak
-                sidecar = os.path.join(
-                    self.table_path,
-                    "_bloom",
-                    B.sidecar_name(p, c),
-                )
-                pairs = np.array([[h1, h2]], dtype=np.int64)
-                if not B.probe_sidecar_path(sidecar, pairs):
-                    keep = False
-                    break
-            if keep:
-                out.append(p)
-        return out
+    # ------------------------------------------------------ history
 
     def rollback_to(self, snapshot_id: int) -> int:
         """Iceberg rollback: point ``current-snapshot-id`` back at an
@@ -1234,26 +955,13 @@ class IcebergLog:
         return snapshot_id
 
     def detail(self) -> dict[str, Any]:
-        """DESCRIBE DETAIL twin: operational stats from manifests
-        alone (no data scan)."""
+        """DESCRIBE DETAIL (see :meth:`_detail`) + snapshot id, count
+        and format version."""
         view = self._resolve()
-        md = self.current_metadata()
+        md = view.metadata
         return {
             "format": "iceberg",
-            "numFiles": len(view.files),
-            "sizeInBytes": sum(
-                f.get("file_size_in_bytes") or 0
-                for f in view.files.values()
-            ),
-            "numRows": sum(
-                f.get("record_count") or 0 for f in view.files.values()
-            ),
-            "numDeleteFiles": len(view.delete_files),
-            "numDeletedRows": sum(
-                f.get("record_count") or 0
-                for f in view.delete_files.values()
-            ),
-            "partitionColumns": view.partition_columns,
+            **self._detail(view),
             "currentSnapshotId": view.snapshot_id,
             "numSnapshots": len(md.get("snapshots", [])),
             "formatVersion": md.get("format-version", 1),
@@ -1367,50 +1075,32 @@ class IcebergLog:
             raise ValueError(f"unknown mode: {mode!r}")
         if not self.exists():
             self.create(df, partition_by)
-        md = self.current_metadata()
+        view = self._resolve()
         # evolution check runs for BOTH modes — an overwrite that
         # widens the schema without it would write parquet columns
         # the reader schema silently drops, and a type change would
         # corrupt reads at scan time instead of failing here
-        evolved = _evolve_iceberg_schema(md, df.schema)
+        evolved = self._evolve(view, df.schema)
         if evolved is not None:
             if not merge_schema:
                 extra = [
-                    f.name
-                    for f in df.schema.fields
-                    if f.name
-                    not in {x["name"] for x in md["schema"]["fields"]}
+                    c for c in df.columns if c not in view.schema.names
                 ]
                 raise ValueError(
                     f"{mode} has columns {extra} not in the table "
                     f"schema; pass merge_schema=True to evolve"
                 )
-            md = evolved
-        self._enforce_constraints(df, md)
-        view = self._resolve()
-        part_cols = view.partition_columns
-        parts = stage_parquet_parts(
-            df, self.table_path, part_cols or None, data_subdir="data"
-        )
-        self._attach_blooms(df, parts, part_cols, md)
-        spec_fields = md["partition-specs"][0]["fields"]
-        manifests = [
-            self._write_manifest(
-                self._entries(parts, part_cols, ADDED, md["schema"]),
-                spec_fields,
-                md["schema"],
-            )
-        ]
+            view = evolved
+        self._enforce_constraints(df, view)
+        md = view.metadata
+        manifests = [self._data_manifest(view, self._stage(view, df))]
         if mode == "append" and view.snapshot_id != -1:
             # REUSE the previous snapshot's manifest FILES verbatim —
             # an append costs O(new parts) manifest rows, never a
             # rewrite of the full file inventory
-            prev = next(
-                s_
-                for s_ in md["snapshots"]
-                if s_["snapshot-id"] == view.snapshot_id
+            manifests += self._manifests_of(
+                _snapshot_entry(md, view.snapshot_id)
             )
-            manifests += self._manifests_of(prev)
         return self._next_commit(
             md, manifests, mode, self._txn_summary(txn)
         )
@@ -1448,59 +1138,6 @@ class IcebergLog:
                 best = b if best is None or b > best else best
         return best
 
-    def optimize(
-        self,
-        spark: SparkSession,
-        zorder_by: list[str] | None = None,
-        target_rows_per_file: int | None = None,
-    ) -> int:
-        """Compaction (Iceberg ``rewriteDataFiles``): rewrite all
-        live parts as fewer, optionally Z-ORDER-clustered files —
-        the snapshot commits with operation ``replace``, which the
-        change feeds (:meth:`read_changes`, :meth:`read_appends`)
-        skip because no logical row changed. Z-ordering reuses
-        :func:`aligned_spark.operators.layout.cluster_by_zorder`
-        (range-repartition on the interleaved key + in-part sort) so
-        the manifest ``lower_bounds``/``upper_bounds`` become
-        selective on every z-ordered column. Old files stay on disk
-        for time travel until :meth:`expire_snapshots`."""
-        md = self.current_metadata()
-        view = self._resolve()
-        if not view.files:
-            return view.snapshot_id
-        df = self.read(spark)
-        n_files = None
-        if target_rows_per_file:
-            n_files = max(1, df.count() // target_rows_per_file)
-        if zorder_by:
-            from aligned_spark.operators.layout import (
-                cluster_by_zorder,
-            )
-
-            df = cluster_by_zorder(
-                df,
-                zorder_by,
-                n_files or df.rdd.getNumPartitions(),
-            )
-        elif n_files:
-            df = df.repartition(n_files)
-        part_cols = view.partition_columns
-        parts = stage_parquet_parts(
-            df, self.table_path, part_cols or None, data_subdir="data"
-        )
-        self._attach_blooms(df, parts, part_cols, md)
-        spec_fields = md["partition-specs"][0]["fields"]
-        manifests = [
-            self._write_manifest(
-                self._entries(parts, part_cols, ADDED, md["schema"]),
-                spec_fields,
-                md["schema"],
-            )
-        ]
-        return self._next_commit(
-            md, manifests, "replace", {"zorder-by": ",".join(zorder_by or [])}
-        )
-
     # ------------------------------------------------------- reading
 
     def read(
@@ -1520,29 +1157,11 @@ class IcebergLog:
         still applies the row-level filter (skipping is sound, not
         complete). Same contract as :meth:`DeltaLog.read`."""
         view = self._resolve(snapshot_id)
-        md = self.current_metadata()
-        if skipping and view.files:
-            fields_by_id = {
-                f["id"]: f
-                for f in md["schema"]["fields"]
-                if isinstance(f.get("type"), str)
-            }
-            view.files = {
-                p: e
-                for p, e in view.files.items()
-                if _iceberg_file_may_match(e, fields_by_id, skipping)
-            }
-            # equality probes additionally consult the bloom
-            # sidecars — the pruning bounds can't do on uniform keys
-            kept = self._bloom_prune(
-                spark, view, md, sorted(view.files), skipping
-            )
-            view.files = {p: view.files[p] for p in kept}
         # explicit reader schema inside _scan: fixes column
         # order/types (hive partition dirs would infer), projects
         # NULL for evolved columns absent from old parts, and applies
         # any position-delete files (merge-on-read)
-        return self._scan(spark, view)
+        return self._scan(spark, view, self._skip(spark, view, skipping))
 
     def read_appends(
         self,
@@ -1623,7 +1242,7 @@ class IcebergLog:
         SEQUENCE NUMBER (:meth:`sequence_numbers` — what the IVM
         cursors store). The domains cannot collide: snapshot ids are
         63-bit random draws, sequence numbers count from 1."""
-        from aligned_spark.sources.cdc import diff_rewrite, tag_changes
+        from aligned_spark.sources.cdc import tag_changes
 
         ids = self.snapshot_ids()
         if from_snapshot_id not in ids or (
@@ -1673,103 +1292,22 @@ class IcebergLog:
                 continue
             cdf_dir = snap.get("summary", {}).get("change-data-dir")
             if cdf_dir:
-                # commit-time change files (r10): plain per-part
-                # scan, no read-time diff — Delta cdc-action parity
-                ch_schema = T.StructType(
-                    [
-                        *view.schema.fields,
-                        T.StructField(
-                            "_change_type", T.StringType(), False
-                        ),
-                    ]
-                )
+                # commit-time change files
                 pieces.append(
-                    spark.read.schema(ch_schema)
-                    .parquet(os.path.join(self.table_path, cdf_dir))
-                    .select(
-                        *cols,
-                        "_change_type",
-                        F.lit(sid)
-                        .cast("long")
-                        .alias("_snapshot_id"),
+                    self._change_file_rows(
+                        spark, view.schema, [cdf_dir], "_snapshot_id", sid
                     )
                 )
                 continue
             mk = snap.get("summary", {}).get("merge-keys")
             keys = mk.split(",") if mk else None
-            if new_del:
-                # merge-on-read commit: the rows its position-delete
-                # files kill, read at the PARENT view (parent deletes
-                # applied, so already-dead rows can't re-emit); scan
-                # only the data files the pairs reference
-                ndp = spark.read.schema(
-                    "file_path string, pos long"
-                ).parquet(
-                    *[
-                        os.path.join(self.table_path, p)
-                        for p in new_del
-                    ]
-                )
-                # bounded: one rel path per touched data file
-                hit = [
-                    r[0]
-                    for r in ndp.select("file_path")
-                    .distinct()
-                    .collect()
-                ]
-                dead = (
-                    self._scan(spark, old_view, hit, keep_meta=True)
-                    .join(
-                        ndp.withColumnRenamed("file_path", "__file")
-                        .withColumnRenamed("pos", "__pos"),
-                        ["__file", "__pos"],
-                        "left_semi",
-                    )
-                    .select(*cols)
-                )
-                if added:  # MOR merge: delete pairs + appended rows
-                    pieces += diff_rewrite(
-                        dead,
-                        self._scan(spark, cur_view, added),
-                        cols,
-                        keys,
-                        "_snapshot_id",
-                        sid,
-                    )
-                else:  # MOR delete
-                    pieces.append(
-                        tag_changes(
-                            dead, cols, "delete", "_snapshot_id", sid
-                        )
-                    )
-                continue
-            if not removed:  # pure append
-                pieces.append(
-                    tag_changes(
-                        self._scan(spark, cur_view, added),
-                        cols,
-                        "insert",
-                        "_snapshot_id",
-                        sid,
-                    )
-                )
-                continue
-            if not added:  # pure remove
-                pieces.append(
-                    tag_changes(
-                        self._scan(spark, old_view, removed),
-                        cols,
-                        "delete",
-                        "_snapshot_id",
-                        sid,
-                    )
-                )
-                continue
-            # copy-on-write rewrite: old/new content of the touched
-            # parts, each side with ITS view's position deletes
-            pieces += diff_rewrite(
-                self._scan(spark, old_view, removed),
-                self._scan(spark, cur_view, added),
+            pieces += self._commit_changes(
+                spark,
+                old_view,
+                cur_view,
+                added,
+                removed,
+                new_del,
                 cols,
                 keys,
                 "_snapshot_id",
@@ -1790,138 +1328,6 @@ class IcebergLog:
 
     #: default orphan-file retention — matches Delta's vacuum window
     DEFAULT_RETENTION_SECONDS = 7 * 24 * 3600
-
-    #: small-file policy — same measured defaults as
-    #: :attr:`DeltaLog.SMALL_FILE_BYTES` / ``MAX_SMALL_FILES``
-    SMALL_FILE_BYTES = 32 << 20
-    MAX_SMALL_FILES = 16
-
-    def _compact_reason(
-        self,
-        max_deleted_ratio: float,
-        max_delete_files: int,
-        max_small_files: int,
-        small_file_bytes: int,
-    ) -> str | None:
-        """'mor' | 'small' | None (manifest metadata only)."""
-        view = self._resolve()
-        n_sidecars = len(view.delete_files)
-        if n_sidecars:
-            rows = sum(
-                f.get("record_count") or 0
-                for f in view.files.values()
-            )
-            dead = sum(
-                f.get("record_count") or 0
-                for f in view.delete_files.values()
-            )
-            if n_sidecars >= max_delete_files or (
-                rows > 0 and dead / rows >= max_deleted_ratio
-            ):
-                return "mor"
-        n_small = sum(
-            1
-            for f in view.files.values()
-            if (f.get("file_size_in_bytes") or 0) < small_file_bytes
-        )
-        if n_small >= max_small_files:
-            return "small"
-        return None
-
-    def should_compact(
-        self,
-        max_deleted_ratio: float = 0.1,
-        max_delete_files: int = 8,
-        max_small_files: int | None = None,
-        small_file_bytes: int | None = None,
-    ) -> bool:
-        """Metadata-only rewriteDataFiles trigger — same policy and
-        measured rationale as :meth:`DeltaLog.should_compact`,
-        including the trickle-ingest small-file criterion."""
-        return (
-            self._compact_reason(
-                max_deleted_ratio,
-                max_delete_files,
-                max_small_files
-                if max_small_files is not None
-                else self.MAX_SMALL_FILES,
-                small_file_bytes
-                if small_file_bytes is not None
-                else self.SMALL_FILE_BYTES,
-            )
-            is not None
-        )
-
-    def compact_small(
-        self,
-        spark: SparkSession,
-        small_file_bytes: int | None = None,
-    ) -> int | None:
-        """Bin-pack ONLY the small live data files (Iceberg
-        ``rewriteDataFiles`` with a min-file-size filter): rides
-        :meth:`_rewrite_commit`, so manifests with no touched file
-        carry over verbatim and the snapshot commits as ``replace``
-        (invisible to the change feeds)."""
-        if small_file_bytes is None:
-            small_file_bytes = self.SMALL_FILE_BYTES
-        md = self.current_metadata()
-        view = self._resolve()
-        small = sorted(
-            p
-            for p, f in view.files.items()
-            if (f.get("file_size_in_bytes") or 0) < small_file_bytes
-        )
-        if len(small) < 2:
-            return None
-        total = sum(
-            view.files[p].get("file_size_in_bytes") or 0
-            for p in small
-        )
-        n_out = max(1, total // (128 << 20) + 1)
-        replacement = self._scan(spark, view, small).coalesce(
-            int(n_out)
-        )
-        return self._rewrite_commit(
-            md,
-            view,
-            small,
-            replacement,
-            "replace",
-            {"bin-packed": "true", "num-small-files": str(len(small))},
-        )
-
-    def maybe_optimize(
-        self,
-        spark: SparkSession,
-        max_deleted_ratio: float = 0.1,
-        max_delete_files: int = 8,
-        max_small_files: int | None = None,
-        small_file_bytes: int | None = None,
-        zorder_by: list[str] | None = None,
-    ) -> bool:
-        """Run compaction iff :meth:`should_compact` — full
-        :meth:`optimize` for MOR state, bounded :meth:`compact_small`
-        for small-file accumulation (same split as
-        :meth:`DeltaLog.maybe_optimize`)."""
-        sfb = (
-            small_file_bytes
-            if small_file_bytes is not None
-            else self.SMALL_FILE_BYTES
-        )
-        reason = self._compact_reason(
-            max_deleted_ratio,
-            max_delete_files,
-            max_small_files
-            if max_small_files is not None
-            else self.MAX_SMALL_FILES,
-            sfb,
-        )
-        if reason is None:
-            return False
-        if reason == "small":
-            return self.compact_small(spark, sfb) is not None
-        self.optimize(spark, zorder_by=zorder_by)
-        return True
 
     def expire_snapshots(
         self,
@@ -2060,252 +1466,138 @@ class IcebergLog:
                     pass
         return sorted(doomed)
 
-    # ----------------------------------------------------- mutations
+    # ------------------------------------------------- codec accessors
 
-    def _touched_files(
-        self,
-        spark: SparkSession,
+    def _head(self) -> IcebergSnapshotView:
+        return self._resolve()
+
+    @staticmethod
+    def _schema_of(view: IcebergSnapshotView) -> T.StructType:
+        return view.schema
+
+    @staticmethod
+    def _props_of(view: IcebergSnapshotView) -> dict[str, Any]:
+        return view.metadata.get("properties") or {}
+
+    @staticmethod
+    def _id_of(view: IcebergSnapshotView) -> int:
+        return view.snapshot_id
+
+    @staticmethod
+    def _file_bytes(data_file: dict[str, Any]) -> int:
+        return int(data_file.get("file_size_in_bytes") or 0)
+
+    @staticmethod
+    def _file_rows(data_file: dict[str, Any]) -> int:
+        return data_file.get("record_count") or 0
+
+    _delete_rows = _file_rows
+
+    @staticmethod
+    def _range_match(
         view: IcebergSnapshotView,
-        row_filter,
-        paths: list[str] | None = None,
+        paths: list[str],
+        preds: list[tuple[str, str, Any]],
     ) -> list[str]:
-        from aligned_spark.sources.parts import touched_files
-
-        scan_paths = (
-            sorted(view.files) if paths is None else sorted(paths)
-        )
-        if not scan_paths:
-            return []
-        # keep_meta carries the table-relative __file column through
-        # the (possible) merge-on-read delete anti-join — _metadata
-        # itself is unresolvable past that join
-        return touched_files(
-            self._scan(spark, view, scan_paths, keep_meta=True),
-            self.table_path,
-            row_filter,
-        )
-
-    def _key_range_candidates(
-        self,
-        md: dict[str, Any],
-        view: IcebergSnapshotView,
-        src_keys: DataFrame,
-        keys: list[str],
-    ) -> list[str]:
-        """Dynamic file pruning for the MERGE touched-file discovery
-        (mirrors :meth:`DeltaLog._key_range_candidates`): MIN/MAX of
-        the source's first key column become manifest-bound range
-        predicates, so a bounded-key-range merge discovers its
-        touched files by scanning only range-overlapping parts.
-        Sound SUPERSET: entries without bounds on the key column
-        always remain candidates."""
-        paths = sorted(view.files)
-        if not paths:
-            return paths
-        col = keys[0]
-        row = (
-            src_keys.agg(
-                F.min(col).alias("lo"), F.max(col).alias("hi")
-            ).first()
-        )
-        lo, hi = row["lo"], row["hi"]
-        if lo is None:  # empty or all-null source keys
-            return paths
         fields_by_id = {
             f["id"]: f
-            for f in md["schema"]["fields"]
+            for f in view.metadata["schema"]["fields"]
             if isinstance(f.get("type"), str)
         }
-        preds = [(col, ">=", lo), (col, "<=", hi)]
-        paths = [
-            p
-            for p in paths
-            if _iceberg_file_may_match(
-                view.files[p], fields_by_id, preds
-            )
-        ]
-        return self._bloom_key_candidates(md, src_keys, col, paths)
-
-    def _bloom_key_candidates(
-        self,
-        md: dict[str, Any],
-        src_keys: DataFrame,
-        col: str,
-        paths: list[str],
-    ) -> list[str]:
-        """Second MERGE-discovery stage — probe range-surviving
-        candidates' self-describing sidecars with the source's
-        distinct key hashes (:meth:`DeltaLog._bloom_key_candidates`
-        with convention-addressed files). Engages only when the
-        column is indexed, the source dtype equals the table dtype
-        (hash compatibility), and the key set fits the probe cap."""
-        from aligned_spark.sources import bloom as B
-
-        if not paths:
-            return paths
-        cols, _ = self._bloom_config(md)
-        if col not in cols:
-            return paths
-        tbl_type = next(
-            (
-                f.dataType
-                for f in _schema_to_spark(md["schema"]).fields
-                if f.name == col
-            ),
-            None,
-        )
-        src_type = next(
-            (
-                f.dataType
-                for f in src_keys.schema.fields
-                if f.name == col
-            ),
-            None,
-        )
-        if tbl_type is None or src_type != tbl_type:
-            return paths
-        pairs = B.collect_probe_pairs(src_keys.select(col), col)
-        if pairs is None:
-            return paths  # key set over the cap — range-only
         return [
             p
             for p in paths
-            if B.probe_sidecar_path(
-                os.path.join(
-                    self.table_path, "_bloom", B.sidecar_name(p, col)
-                ),
-                pairs,
-            )
+            if _iceberg_file_may_match(view.files[p], fields_by_id, preds)
         ]
 
-    @staticmethod
-    def _prop_int(props: dict, key: str, default: int) -> int:
-        try:
-            return int(props.get(key, default))
-        except (TypeError, ValueError):
-            return default
-
-    def _prune_merge_candidates(
-        self,
-        md: dict[str, Any],
-        view: IcebergSnapshotView,
-        src_keys: DataFrame,
-        keys: list[str],
-    ) -> list[str]:
-        """MERGE discovery candidates with the pruning passes gated
-        on candidate bytes (mirrors
-        :meth:`DeltaLog._prune_merge_candidates`): when the whole
-        live set costs less to scan than the pruning jobs' fixed
-        latency, return it unpruned."""
-        from aligned_spark.sources.delta_log import (
-            MERGE_PRUNE_MIN_BYTES,
-            MERGE_PRUNE_MIN_BYTES_PROP,
-        )
-
-        paths = sorted(view.files)
-        floor = self._prop_int(
-            md.get("properties") or {},
-            MERGE_PRUNE_MIN_BYTES_PROP,
-            MERGE_PRUNE_MIN_BYTES,
-        )
-        live = sum(
-            int(
-                (view.files[p] or {}).get("file_size_in_bytes") or 0
-            )
-            for p in paths
-        )
-        if live <= floor:
-            return paths
-        return self._key_range_candidates(md, view, src_keys, keys)
-
-    def _cdc_materialize(
-        self,
-        md: dict[str, Any],
-        view: IcebergSnapshotView,
-        touched: list[str],
+    def _bloom_indexed(
+        self, view: IcebergSnapshotView, col: str, paths: list[str]
     ) -> bool:
-        """Same materialization policy as
-        :meth:`DeltaLog._cdc_materialize` — manifest metadata only:
-        (files AND bytes cross the small thresholds) OR bytes alone
-        cross the large threshold (few-huge-parts rewrites must not
-        fall back to a one-task stream diff)."""
-        if not touched:
-            return False
-        props = md.get("properties") or {}
-        f_thr = self._prop_int(
-            props, CHANGE_DATA_THRESHOLD_PROP, CHANGE_DATA_FILE_THRESHOLD
-        )
-        b_thr = self._prop_int(
-            props, CHANGE_DATA_BYTES_PROP, CHANGE_DATA_BYTES_THRESHOLD
-        )
-        b_large = self._prop_int(
-            props,
-            CHANGE_DATA_BYTES_LARGE_PROP,
-            CHANGE_DATA_BYTES_LARGE_THRESHOLD,
-        )
-        size = sum(
-            int(
-                (view.files.get(p) or {}).get("file_size_in_bytes")
-                or 0
-            )
-            for p in touched
-        )
-        if size >= b_large:
-            return True
-        return len(touched) >= f_thr and size >= b_thr
+        from aligned_spark.sources.bloom import bloom_columns_of
 
-    def _maybe_stage_change_data(
+        return col in bloom_columns_of(
+            {"configuration": self._props_of(view)}
+        )
+
+    def _bloom_may_contain(
+        self, view: IcebergSnapshotView, path: str, col: str, pairs: Any
+    ) -> bool:
+        """Probe the convention-addressed, self-describing sidecar
+        (the Avro manifest-entry schema is fixed, so bloom refs ride
+        a tiny file header instead of metadata)."""
+        from aligned_spark.sources import bloom as B
+
+        return B.probe_sidecar_path(
+            os.path.join(self.table_path, "_bloom", B.sidecar_name(path, col)),
+            pairs,
+        )
+
+    @staticmethod
+    def _evolve(
+        view: IcebergSnapshotView, schema: T.StructType
+    ) -> IcebergSnapshotView | None:
+        md = _evolve_iceberg_schema(view.metadata, schema)
+        if md is None:
+            return None
+        return replace(view, schema=_schema_to_spark(md["schema"]), metadata=md)
+
+    @staticmethod
+    def _with_props(
+        view: IcebergSnapshotView, props: dict[str, Any]
+    ) -> IcebergSnapshotView:
+        return replace(view, metadata={**view.metadata, "properties": props})
+
+    # ------------------------------------------------------- staging
+
+    def _stage(
         self,
-        md: dict[str, Any],
         view: IcebergSnapshotView,
-        touched: list[str],
-        parts: list[StagedPart],
-        summary_extra: dict[str, str] | None,
-        spark: SparkSession,
-    ) -> dict[str, str] | None:
-        """Delta-parity commit-time change files for large CoW
-        rewrites (r10): when a rewrite touches >= the threshold file
-        count, diff the touched parts' old content against the STAGED
-        parts' actual bytes and write the row-level changes as
-        ``_change_data/`` parquet, recording their rel paths in the
-        snapshot summary (``change-data-files`` — summaries are the
-        iceberg analog of Delta ``cdc`` actions). Batch
-        ``read_changes`` and the CDF stream prefer them: a giant
-        historical MERGE replays as plain per-file scans."""
-        if not self._cdc_materialize(md, view, touched):
-            return summary_extra
-        cols = [f.name for f in view.schema.fields]
-        if {f["name"] for f in md["schema"]["fields"]} != set(cols):
-            return summary_extra  # evolving commit: keep read-time diff
-        from aligned_spark.sources.cdc import diff_rewrite
-
-        staged_view = IcebergSnapshotView(
-            -1,
-            view.schema,
+        df: DataFrame,
+        partition_by: list[str] | None = None,
+    ) -> dict[str, StagedPart]:
+        """Stage parquet parts (+ bloom sidecars) under ``data/``.
+        The partition spec is fixed at CREATE, so ``partition_by`` is
+        ignored."""
+        parts = stage_parquet_parts(
+            df,
+            self.table_path,
+            view.partition_columns or None,
+            data_subdir="data",
+        )
+        self._attach_blooms(
+            view,
+            df,
+            [{"path": p.path, "stats": p.stats} for p in parts],
             view.partition_columns,
-            {
-                p.path: {"partition": p.partition_values}
-                for p in parts
-            },
         )
-        mk = (summary_extra or {}).get("merge-keys")
-        pieces = diff_rewrite(
-            self._scan(spark, view, touched).select(*cols),
-            self._scan(
-                spark, staged_view, sorted(staged_view.files)
-            ).select(*cols),
-            cols,
-            mk.split(",") if mk else None,
-            "_snapshot_id",
-            0,
+        return {p.path: p for p in parts}
+
+    def _data_manifest(
+        self, view: IcebergSnapshotView, staged: dict[str, StagedPart]
+    ) -> dict[str, Any]:
+        md = view.metadata
+        return self._write_manifest(
+            self._entries(
+                list(staged.values()),
+                view.partition_columns,
+                ADDED,
+                md["schema"],
+            ),
+            md["partition-specs"][0]["fields"],
+            md["schema"],
         )
-        changes = pieces[0]
-        for piece in pieces[1:]:
-            changes = changes.unionByName(piece)
-        # one directory per commit: the summary carries ONE short
-        # prefix however many change files the rewrite produced —
-        # metadata.json accumulates every snapshot's summary, so a
-        # per-file list would bloat it at 10k-file-rewrite scale
+
+    def _stage_change_data(
+        self, changes: DataFrame, cols: list[str]
+    ) -> str | None:
+        """Write one rewrite's row-level changes as ``_change_data/``
+        parquet and return the directory the snapshot summary records
+        (``change-data-dir`` — summaries are the Iceberg analog of
+        Delta ``cdc`` actions); None for a zero-change rewrite. One
+        directory per commit: the summary carries ONE short prefix
+        however many change files the rewrite produced —
+        metadata.json accumulates every snapshot's summary, so a
+        per-file list would bloat it at 10k-file-rewrite scale."""
         subdir = f"_change_data/{uuid.uuid4().hex}"
         cparts = stage_parquet_parts(
             changes.select(*cols, "_change_type"),
@@ -2313,68 +1605,84 @@ class IcebergLog:
             None,
             data_subdir=subdir,
         )
-        if not cparts:
-            return summary_extra  # zero-change rewrite: no marker
-        return {
-            **(summary_extra or {}),
-            "change-data-dir": subdir,
-        }
+        return subdir if cparts else None
 
-    def _rewrite_commit(
+    def _stage_deletes(
+        self, view: IcebergSnapshotView, sorted_pairs: DataFrame
+    ) -> dict[str, Any]:
+        """Write sorted ``(file_path, pos)`` pairs as v2
+        position-delete parquet and return its content=1
+        manifest-list entry."""
+        parts = stage_parquet_parts(
+            sorted_pairs, self.table_path, None, data_subdir="data"
+        )
+        md = view.metadata
+        manifest = self._write_manifest(
+            self._entries(parts, view.partition_columns, ADDED),
+            md["partition-specs"][0]["fields"],
+            md["schema"],
+        )
+        return {**manifest, "content": 1}
+
+    # ---------------------------------------------------- committing
+
+    def _commit_properties(
         self,
-        md: dict[str, Any],
         view: IcebergSnapshotView,
-        touched: list[str],
-        replacement: DataFrame,
+        props: dict[str, Any],
         operation: str,
-        summary_extra: dict[str, str] | None = None,
+        params: dict[str, Any],
+    ) -> int:
+        version = view.metadata[_READ_VERSION_KEY] + 1
+        self._commit_metadata(
+            self._with_props(view, props).metadata, version
+        )
+        return version
+
+    def _commit_rewrite(
+        self,
+        view: IcebergSnapshotView,
+        removed: list[str],
+        staged: dict[str, StagedPart],
+        changes: str | None,
+        kind: str,
+        keys: list[str] | None = None,
+        txn: tuple[str, int] | None = None,
+        target: IcebergSnapshotView | None = None,
     ) -> int:
         """Copy-on-write at MANIFEST granularity too: manifests whose
         files are all untouched carry over verbatim; only manifests
-        containing a touched file are rewritten (their survivors as
-        EXISTING entries), plus one new manifest for the rewritten
-        parts."""
-        spec_fields = md["partition-specs"][0]["fields"]
-        parts = stage_parquet_parts(
-            replacement,
-            self.table_path,
-            view.partition_columns or None,
-            data_subdir="data",
-        )
-        self._attach_blooms(
-            replacement, parts, view.partition_columns, md
-        )
-        summary_extra = self._maybe_stage_change_data(
-            md,
-            view,
-            touched,
-            parts,
-            summary_extra,
-            replacement.sparkSession,
-        )
-        manifests = [
-            self._write_manifest(
-                self._entries(
-                    parts, view.partition_columns, ADDED, md["schema"]
-                ),
-                spec_fields,
-                md["schema"],
-            )
-        ]
-        touched_set = set(touched)
+        containing a removed file are rewritten (their survivors as
+        EXISTING entries), plus one new manifest for the staged
+        parts. Compaction commits as ``replace``, which the change
+        feeds skip."""
+        md = (target or view).metadata
+        operation, summary = {
+            "merge": ("overwrite", {}),
+            "replace_where": ("overwrite", {"mode": "replaceWhere"}),
+            "delete": ("delete", {}),
+            "compact": (
+                "replace",
+                {"bin-packed": "true", "num-small-files": str(len(removed))},
+            ),
+        }[kind]
+        if keys:
+            # merge-keys let read_changes reconstruct update pairs
+            summary["merge-keys"] = ",".join(keys)
+        summary.update(self._txn_summary(txn) or {})
+        if changes:
+            summary["change-data-dir"] = changes
+        manifests = [self._data_manifest(target or view, staged)]
+        removed_set = set(removed)
         if view.snapshot_id != -1:
-            prev = next(
-                s_
-                for s_ in md["snapshots"]
-                if s_["snapshot-id"] == view.snapshot_id
-            )
+            prev = _snapshot_entry(md, view.snapshot_id)
             for m in self._manifests_of(prev):
                 entries = _read_manifest_cached(
                     os.path.join(self.table_path, m["manifest_path"])
                 )
                 hit = any(
                     e["status"] != DELETED
-                    and e["data_file"]["file_path"] in touched_set
+                    and e["data_file"]["file_path"] in removed_set
                     for e in entries
                 )
                 if not hit:
@@ -2388,372 +1696,64 @@ class IcebergLog:
                     }
                     for e in entries
                     if e["status"] != DELETED
-                    and e["data_file"]["file_path"] not in touched_set
+                    and e["data_file"]["file_path"] not in removed_set
                 ]
                 if survivors:
                     manifests.append(
                         self._write_manifest(
-                            survivors, spec_fields, md["schema"]
+                            survivors,
+                            md["partition-specs"][0]["fields"],
+                            md["schema"],
                         )
                     )
-        return self._next_commit(
-            md, manifests, operation, summary_extra
-        )
+        return self._next_commit(md, manifests, operation, summary)
 
-    def merge_upsert(
+    def _commit_mor(
         self,
-        df: DataFrame,
-        keys: list[str],
-        txn: tuple[str, int] | None = None,
-        merge_schema: bool = False,
-    ) -> int:
-        """MERGE (copy-on-write): whenMatchedUpdateAll +
-        whenNotMatchedInsertAll; only parts containing a matched key
-        rewrite — same file-pruned plan as the Delta MERGE. Callers
-        pre-dedup the source on ``keys``. ``txn`` as in
-        :meth:`write`.
-
-        Source columns unknown to the table raise unless
-        ``merge_schema=True``, which appends them with fresh field
-        ids in the same snapshot (the spec's evolution rule); the
-        source must then carry every existing column — updateAll
-        replaces matched rows whole, so a partial source would
-        silently null old values."""
-        if not self.exists():
-            return self.write(df, "append", txn=txn)
-        spark = df.sparkSession
-        # one logical source, three physical consumers (key-range
-        # probe, discovery semi-join, staging write) — same
-        # single-computation discipline as the Delta MERGE
-        own_cache = not df.is_cached
-        if own_cache:
-            df = df.persist()
-        try:
-            return self._merge_upsert_inner(
-                spark, df, keys, txn, merge_schema
-            )
-        finally:
-            if own_cache:
-                df.unpersist()
-
-    def _merge_upsert_inner(
-        self,
-        spark: SparkSession,
-        df: DataFrame,
-        keys: list[str],
-        txn: tuple[str, int] | None,
-        merge_schema: bool,
-    ) -> int:
-        md = self.current_metadata()
-        self._enforce_constraints(df, md)
-        evolved_md = _evolve_iceberg_schema(md, df.schema)
-        if evolved_md is not None:
-            if not merge_schema:
-                known = {f["name"] for f in md["schema"]["fields"]}
-                extra = [c for c in df.columns if c not in known]
-                raise ValueError(
-                    f"MERGE source has columns {extra} not in the "
-                    f"table schema; pass merge_schema=True to evolve"
-                )
-            missing = sorted(
-                {f["name"] for f in md["schema"]["fields"]}
-                - set(df.columns)
-            )
-            if missing:
-                raise ValueError(
-                    f"merge_schema MERGE source must carry every "
-                    f"existing table column; missing: {missing}"
-                )
-            md = evolved_md
-        view = self._resolve()
-        src_keys = df.select(*keys).distinct()
-        touched = self._touched_files(
-            spark,
-            view,
-            lambda cur: cur.join(src_keys, keys, "left_semi"),
-            paths=self._prune_merge_candidates(
-                md, view, src_keys, keys
-            ),
-        )
-        cols = (
-            [f["name"] for f in md["schema"]["fields"]]
-            if evolved_md is not None
-            else [f.name for f in view.schema.fields]
-        )
-        out = df.select(*cols)
-        if touched:
-            # _scan applies any position deletes on the touched parts
-            # — a CoW rewrite must not resurrect MOR-deleted rows;
-            # under evolution the survivors project NULL for the new
-            # columns (allowMissingColumns)
-            survivors = self._scan(spark, view, touched).join(
-                src_keys, keys, "left_anti"
-            )
-            out = survivors.unionByName(
-                out, allowMissingColumns=evolved_md is not None
-            )
-        # record the keys as a table property too, so later keyless
-        # DELETE snapshots can take the keyed CDC diff path
-        props = dict(md.get("properties") or {})
-        if props.get(_MERGE_KEYS_PROP) != ",".join(keys):
-            props[_MERGE_KEYS_PROP] = ",".join(keys)
-            md = {**md, "properties": props}
-        return self._rewrite_commit(
-            md, view, touched, out, "overwrite",
-            # merge-keys let read_changes reconstruct update pairs
-            {"merge-keys": ",".join(keys), **(self._txn_summary(txn) or {})},
-        )
-
-    def _keyed_cdf_summary(self, md: dict[str, Any]) -> dict[str, str]:
-        """``merge-keys`` summary fields for a keyless rewrite
-        snapshot, from the table's recorded merge-key history — the
-        keyed diff beats the whole-row exceptAll fallback; genuinely
-        keyless tables still fall back."""
-        mk = (md.get("properties") or {}).get(_MERGE_KEYS_PROP)
-        return {"merge-keys": mk} if mk else {}
-
-    def replace_where(
-        self,
-        df: DataFrame,
-        predicate: Column,
-        validate: bool = True,
-    ) -> int:
-        """Delta-style ``replaceWhere`` for Iceberg (the engines'
-        ``overwrite(overwritePartitions/filter)``): atomically replace
-        exactly the rows matching ``predicate`` with ``df`` in ONE
-        snapshot — the idiomatic partition/date-range refresh
-        (delete_where + insert would be two snapshots with a visible
-        gap). Only parts containing a matching row rewrite, at
-        manifest granularity. ``validate`` enforces that every
-        inserted row satisfies the predicate; the schema never
-        evolves through this path (matching
-        :meth:`DeltaLog.replace_where`)."""
-        spark = df.sparkSession
-        cond = F.coalesce(predicate, F.lit(False))
-        if validate and df.filter(~cond).count():
-            raise ValueError(
-                "replaceWhere: inserted row(s) violate the predicate"
-            )
-        if not self.exists():
-            return self.write(df, "append")
-        md = self.current_metadata()
-        self._enforce_constraints(df, md)
-        view = self._resolve()
-        if view.snapshot_id == -1:  # created but never written
-            return self.write(df, "append")
-        cols = [f.name for f in view.schema.fields]
-        extra = [c for c in df.columns if c not in cols]
-        if extra:
-            raise ValueError(
-                f"replaceWhere has columns {extra} not in the table "
-                f"schema; replaceWhere never evolves the schema"
-            )
-        touched = self._touched_files(
-            spark, view, lambda cur: cur.filter(cond)
-        )
-        out = df.select(*cols)
-        if touched:
-            survivors = (
-                self._scan(spark, view, touched)
-                .select(*cols)
-                .filter(~cond)
-            )
-            out = survivors.unionByName(out)
-        return self._rewrite_commit(
-            md, view, touched, out, "overwrite",
-            {"mode": "replaceWhere", **self._keyed_cdf_summary(md)},
-        )
-
-    def delete_where(
-        self, spark: SparkSession, predicate: Column
-    ) -> int:
-        """DELETE rows matching ``predicate`` (NULL keeps the row);
-        only parts containing a match rewrite."""
-        md = self.current_metadata()
-        view = self._resolve()
-        cond = F.coalesce(predicate, F.lit(False))
-        touched = self._touched_files(
-            spark, view, lambda cur: cur.filter(cond)
-        )
-        if not touched:
-            return view.snapshot_id
-        survivors = self._scan(spark, view, touched).filter(~cond)
-        return self._rewrite_commit(
-            md, view, touched, survivors, "delete",
-            self._keyed_cdf_summary(md) or None,
-        )
-
-    # ------------------------------------------ merge-on-read writes
-
-    def _stage_delete_manifest(
-        self, md: dict[str, Any], pairs: DataFrame
-    ) -> dict[str, Any]:
-        """Write ``(file_path, pos)`` pairs as v2 position-delete
-        parquet (sorted by file then position per spec, range-
-        clustered so each delete file covers few data files) and
-        return its content=1 manifest-list entry."""
-        spec_fields = md["partition-specs"][0]["fields"]
-        part_cols = [f["name"] for f in spec_fields]
-        sorted_pairs = pairs.repartitionByRange(
-            "file_path", "pos"
-        ).sortWithinPartitions("file_path", "pos")
-        parts = stage_parquet_parts(
-            sorted_pairs, self.table_path, None, data_subdir="data"
-        )
-        manifest = self._write_manifest(
-            self._entries(parts, part_cols, ADDED),
-            spec_fields,
-            md["schema"],
-        )
-        return {**manifest, "content": 1}
-
-    def delete_where_mor(
-        self,
-        spark: SparkSession,
-        predicate: Column,
-        txn: tuple[str, int] | None = None,
-    ) -> int:
-        """Merge-on-read DELETE (Iceberg v2 position deletes): a
-        matching row costs ONE (file_path, pos) pair in a small
-        delete file — no data part is rewritten, unlike
-        :meth:`delete_where`. Reads apply the pairs with a broadcast
-        anti-join on the scan's ``_metadata`` (file, row_index);
-        :meth:`optimize` compacts them away. The 100 TB trade the
-        spec makes: tiny-delete latency for a per-read anti-join."""
-        md = self.current_metadata()
-        view = self._resolve()
-        cond = F.coalesce(predicate, F.lit(False))
-        pairs = (
-            self._scan(spark, view, keep_meta=True)
-            .filter(cond)
-            .select(
-                F.col("__file").alias("file_path"),
-                F.col("__pos").alias("pos"),
-            )
-            .persist()
-        )
-        try:
-            if view.snapshot_id == -1 or pairs.isEmpty():
-                return view.snapshot_id
-            manifests = [self._stage_delete_manifest(md, pairs)]
-        finally:
-            pairs.unpersist()
-        snap = next(
-            s_
-            for s_ in md["snapshots"]
-            if s_["snapshot-id"] == view.snapshot_id
-        )
-        manifests += self._manifests_of(snap)
-        md = {**md, "format-version": 2}  # v2 feature now in use
-        return self._next_commit(
-            md,
-            manifests,
-            "delete",
-            {"mode": "merge-on-read", **(self._txn_summary(txn) or {})},
-        )
-
-    def merge_upsert_mor(
-        self,
-        df: DataFrame,
-        keys: list[str],
-        txn: tuple[str, int] | None = None,
-    ) -> int:
-        """Merge-on-read MERGE: matched old rows become position-
-        delete pairs, ALL source rows append as new parts — zero data
-        rewrites (a 1-row upsert into a 100 TB table writes one tiny
-        delete file and one tiny data file). Same logical contract as
-        :meth:`merge_upsert`; CDC reconstructs the identical
-        update-pair feed from the pairs + appended parts."""
-        if not self.exists():
-            return self.write(df, "append", txn=txn)
-        spark = df.sparkSession
-        md = self.current_metadata()
-        self._enforce_constraints(df, md)
-        view = self._resolve()
-        if view.snapshot_id == -1:  # created but never written
-            return self.write(df, "append", txn=txn)
-        cols = [f.name for f in view.schema.fields]
-        # two physical consumers (key probes + staging write) — same
-        # single-computation discipline as the CoW MERGE
-        own_cache = not df.is_cached
-        if own_cache:
-            df = df.persist()
-        try:
-            return self._merge_upsert_mor_inner(
-                spark, df, md, view, cols, keys, txn
-            )
-        finally:
-            if own_cache:
-                df.unpersist()
-
-    def _merge_upsert_mor_inner(
-        self,
-        spark: SparkSession,
-        df: DataFrame,
-        md: dict[str, Any],
         view: IcebergSnapshotView,
-        cols: list[str],
-        keys: list[str],
-        txn: tuple[str, int] | None,
+        staged: dict[str, StagedPart] | None,
+        deletes: dict[str, Any] | None,
+        keys: list[str] | None = None,
+        txn: tuple[str, int] | None = None,
+        target: IcebergSnapshotView | None = None,
     ) -> int:
-        src_keys = df.select(*keys).distinct()
-        # pair discovery scans only key-range-overlapping parts
-        # (same dynamic file pruning as the CoW MERGE, same
-        # candidate-bytes gate)
-        cand = self._prune_merge_candidates(md, view, src_keys, keys)
-        pairs = (
-            self._scan(spark, view, cand, keep_meta=True)
-            .join(src_keys, keys, "left_semi")
-            .select(
-                F.col("__file").alias("file_path"),
-                F.col("__pos").alias("pos"),
-            )
-            .persist()
-        )
-        spec_fields = md["partition-specs"][0]["fields"]
-        part_cols = view.partition_columns
-        try:
-            parts = stage_parquet_parts(
-                df.select(*cols),
-                self.table_path,
-                part_cols or None,
-                data_subdir="data",
-            )
-            manifests = [
-                self._write_manifest(
-                    self._entries(
-                        parts, part_cols, ADDED, md["schema"]
-                    ),
-                    spec_fields,
-                    md["schema"],
-                )
-            ]
-            if not pairs.isEmpty():
-                manifests.append(
-                    self._stage_delete_manifest(md, pairs)
-                )
-        finally:
-            pairs.unpersist()
-        snap = next(
-            s_
-            for s_ in md["snapshots"]
-            if s_["snapshot-id"] == view.snapshot_id
-        )
-        manifests += self._manifests_of(snap)
-        md = {**md, "format-version": 2}
-        # record the keys as a table property (same as the CoW MERGE)
-        # so later keyless DELETE snapshots take the keyed CDC path
-        props = dict(md.get("properties") or {})
-        if props.get(_MERGE_KEYS_PROP) != ",".join(keys):
-            props[_MERGE_KEYS_PROP] = ",".join(keys)
-            md = {**md, "properties": props}
+        """One merge-on-read snapshot: the new position-delete
+        manifest (a MERGE also adds a manifest of its staged parts; a
+        DELETE has ``staged`` None) plus every manifest of the parent
+        reused verbatim. Position deletes are a v2 feature, so the
+        table's format-version moves to 2."""
+        md = (target or view).metadata
+        manifests = []
+        summary = {"mode": "merge-on-read"}
+        if staged is not None:
+            manifests.append(self._data_manifest(view, staged))
+            summary["merge-keys"] = ",".join(keys)
+        if deletes is not None:
+            manifests.append(deletes)
+        manifests += self._manifests_of(_snapshot_entry(md, view.snapshot_id))
+        summary.update(self._txn_summary(txn) or {})
         return self._next_commit(
-            md,
+            {**md, "format-version": 2},
             manifests,
-            "overwrite",
-            {
-                "mode": "merge-on-read",
-                "merge-keys": ",".join(keys),
-                **(self._txn_summary(txn) or {}),
-            },
+            "delete" if staged is None else "overwrite",
+            summary,
+        )
+
+    def _commit_optimize(
+        self,
+        view: IcebergSnapshotView,
+        staged: dict[str, StagedPart],
+        zorder_by: list[str] | None,
+    ) -> int:
+        """Compaction (Iceberg ``rewriteDataFiles``): ONE manifest of
+        the rewritten parts replaces every data and delete manifest;
+        the snapshot commits as ``replace``, which the change feeds
+        (:meth:`read_changes`, :meth:`read_appends`) skip because no
+        logical row changed. Old files stay on disk for time travel
+        until :meth:`expire_snapshots`."""
+        return self._next_commit(
+            view.metadata,
+            [self._data_manifest(view, staged)],
+            "replace",
+            {"zorder-by": ",".join(zorder_by or [])},
         )

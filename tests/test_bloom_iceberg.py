@@ -55,10 +55,7 @@ def test_sidecars_built_and_read_prunes(spark, ice_bloom):
 
     key = log.read(spark).select("k").first()["k"]
     preds = [("k", "=", key)]
-    md = log.current_metadata()
-    surv = log._bloom_prune(
-        spark, view, md, sorted(view.files), preds
-    )
+    surv = log._bloom_prune(spark, view, sorted(view.files), preds)
     assert len(surv) == 1
     # the pruned read still finds the row (soundness)
     assert (
@@ -72,11 +69,8 @@ def test_sidecars_built_and_read_prunes(spark, ice_bloom):
 def test_absent_key_prunes_everything(spark, ice_bloom):
     log = ice_bloom
     preds = [("k", "=", 123_456_789)]
-    md = log.current_metadata()
     view = log._resolve()
-    surv = log._bloom_prune(
-        spark, view, md, sorted(view.files), preds
-    )
+    surv = log._bloom_prune(spark, view, sorted(view.files), preds)
     assert surv == []
     assert (
         log.read(spark, skipping=preds)
@@ -89,7 +83,6 @@ def test_absent_key_prunes_everything(spark, ice_bloom):
 def test_merge_discovery_prunes_to_source_file(spark, ice_bloom):
     log = ice_bloom
     view = log._resolve()
-    md = log.current_metadata()
     one = sorted(view.files)[0]
     src = (
         spark.read.parquet(os.path.join(log.table_path, one))
@@ -97,7 +90,7 @@ def test_merge_discovery_prunes_to_source_file(spark, ice_bloom):
         .limit(300)
         .withColumn("v", F.lit(-1).cast("long"))
     )
-    cands = log._key_range_candidates(md, view, src, ["k"])
+    cands = log._key_range_candidates(view, src, ["k"])
     assert one in cands  # sound: the true file always survives
     assert len(cands) < len(view.files)
 
@@ -106,11 +99,10 @@ def test_unindexed_column_and_missing_sidecar_fall_back(
     spark, ice_bloom
 ):
     log = ice_bloom
-    md = log.current_metadata()
     view = log._resolve()
     # v is not indexed: bloom stage is a no-op (sound superset)
     surv = log._bloom_prune(
-        spark, view, md, sorted(view.files), [("v", "=", 7)]
+        spark, view, sorted(view.files), [("v", "=", 7)]
     )
     assert surv == sorted(view.files)
 

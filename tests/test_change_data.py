@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 from aligned_spark.sources.delta_log import (
     CHANGE_DATA_BYTES_LARGE_PROP,
     CHANGE_DATA_BYTES_PROP,
+    CHANGE_DATA_FILE_THRESHOLD,
     CHANGE_DATA_THRESHOLD_PROP,
     DeltaLog,
 )
@@ -35,6 +36,14 @@ def _cdc_paths(tbl: str, v: int) -> list[str]:
         a["cdc"]["path"]
         for a in _commit_actions(tbl, v)
         if "cdc" in a
+    ]
+
+
+def _removed(tbl: str, v: int) -> list[str]:
+    return [
+        a["remove"]["path"]
+        for a in _commit_actions(tbl, v)
+        if "remove" in a
     ]
 
 
@@ -427,16 +436,23 @@ def test_bytes_threshold_gates_materialization(
         .repartitionByRange(24, "id")
         .selectExpr("id", "id as v")
     )
+    # touches the first 12 of the 24 parts: past the file-count gate,
+    # so only the bytes gate can hold it back; the other 12 parts stay
+    # live, keeping the table many-files for the second merge
     log.merge_upsert(
-        spark.range(0, 120, 5).selectExpr("id", "id + 1 as v"),
+        spark.range(0, 60, 5).selectExpr("id", "id + 1 as v"),
         ["id"],
     )
-    assert _cdc_paths(tbl, 1) == []  # 24 files but ~KB of bytes
+    assert len(_removed(tbl, 1)) >= CHANGE_DATA_FILE_THRESHOLD
+    assert _cdc_paths(tbl, 1) == []  # many files but ~KB of bytes
     log.set_properties({CHANGE_DATA_BYTES_PROP: 0})
+    # a source covering every id touches every live part
+    assert len(log.snapshot().files) >= CHANGE_DATA_FILE_THRESHOLD
     log.merge_upsert(
-        spark.range(0, 120, 5).selectExpr("id", "id + 2 as v"),
+        spark.range(0, 120).selectExpr("id", "id + 2 as v"),
         ["id"],
     )
+    assert len(_removed(tbl, 3)) >= CHANGE_DATA_FILE_THRESHOLD
     assert _cdc_paths(tbl, 3)
 
 

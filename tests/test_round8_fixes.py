@@ -410,12 +410,11 @@ def test_iceberg_merge_prunes_files_by_key_range(spark, tmp_path):
         ).coalesce(1),
         "append",
     )
-    md = log.current_metadata()
     view = log._resolve()
     assert len(view.files) == 2
     src = spark.createDataFrame([Row(k=1050, v="UPD")])
     cand = log._key_range_candidates(
-        md, view, src.select("k").distinct(), ["k"]
+        view, src.select("k").distinct(), ["k"]
     )
     assert len(cand) == 1, cand
     log.merge_upsert(src, ["k"])

@@ -50,29 +50,30 @@ def main() -> int:
     from aligned_spark.session import get_spark
 
     from aligned_spark.sources.delta_log import DeltaLog
+    from aligned_spark.sources.iceberg_log import IcebergLog
     from aligned_spark.sources import parts as parts_mod
     from aligned_spark.operators.incremental import (
         IncrementalAggregate,
         RollingIncrementalAggregate,
     )
 
-    for m in (
-        "write",
+    # the write core (sources/table_log.py) is shared: wrap it on each
+    # codec class so the two formats report separately
+    core = (
         "merge_upsert",
         "delete_where",
-        "read_cdf",
-        "read",
-        "snapshot",
-        "commit",
         "_touched_files",
         "_key_range_candidates",
         "_bloom_key_candidates",
-        "_stage_parts",
+        "_stage",
         "_stage_change_data",
-        "txn_version",
         "maybe_optimize",
-    ):
+    )
+    delta_only = ("write", "read_cdf", "read", "snapshot", "commit", "txn_version")
+    for m in (*delta_only, *core):
         wrap(DeltaLog, m)
+    for m in ("write", "read", "read_changes", "_resolve", *core):
+        wrap(IcebergLog, m, f"Ice.{m}")
     for m in (
         "refresh",
         "apply_changes",
@@ -97,23 +98,6 @@ def main() -> int:
         "read",
     ):
         wrap(RollingIncrementalAggregate, m, f"RollIVM.{m}")
-
-    # iceberg side
-    from aligned_spark.sources.iceberg_log import IcebergLog
-
-    for m in (
-        "append",
-        "merge_upsert",
-        "delete_where",
-        "read",
-        "read_cdf",
-        "read_changes",
-        "_resolve",
-        "write",
-        "commit" if hasattr(IcebergLog, "commit") else "append",
-    ):
-        if hasattr(IcebergLog, m):
-            wrap(IcebergLog, m, f"Ice.{m}")
 
     from aligned_spark.sources import vector_index as vi
 
