@@ -10,7 +10,6 @@ from aligned_spark.functions.text import (
     language_id,
     quality_score,
     token_count,
-    rolling_fingerprint,
 )
 
 __all__ = [
@@ -21,5 +20,4 @@ __all__ = [
     "language_id",
     "quality_score",
     "token_count",
-    "rolling_fingerprint",
 ]

@@ -67,6 +67,15 @@ def whitespace_token_count(text: Column) -> Column:
     )
 
 
+def ws_tokens(text: Column) -> Column:
+    """Whitespace tokens (Java ``\\s``), case and punctuation kept —
+    the words a span-removal pass cuts and reassembles."""
+    return F.filter(
+        F.split(F.coalesce(text, F.lit("")), r"\s+"),
+        lambda w: w != F.lit(""),
+    )
+
+
 def token_count(text: Column) -> Column:
     """BPE-ish token count via a GPT-2-style pre-tokenizer regex."""
     return F.size(
@@ -136,17 +145,6 @@ def line_dup_ratio(text: Column) -> Column:
     ).otherwise(F.lit(0.0))
 
 
-def rolling_fingerprint(text: Column, width: int = 8) -> Column:
-    """Document fingerprint: min-of-rolling-hashes over word
-    ``width``-grams (a winnowing-style content signature). Two
-    documents sharing large text spans collide with high probability.
-
-    Implemented as ``array_min`` over :func:`shingle_hashes` — the
-    hash-combined form that never builds gram strings and never
-    re-evaluates the word array per element."""
-    return F.array_min(shingle_hashes(text, width))
-
-
 def char_ngrams(text: Column, n: int = 3) -> Column:
     """Array of lowercase character n-grams (for Jaccard / MinHash).
 
@@ -174,52 +172,6 @@ def _sliding_zip(arr: Column, width: int) -> Column:
     shifted = [F.slice(arr, k + 1, F.greatest(n, F.lit(1))) for k in range(width)]
     zipped = F.arrays_zip(*shifted)
     return F.slice(zipped, 1, F.greatest(n - (width - 1), F.lit(1)))
-
-
-def word_shingles(text: Column, width: int = 3) -> Column:
-    """Array of distinct word ``width``-shingles (as strings)."""
-    windows = _sliding_zip(_words(text), width)
-    return F.array_distinct(
-        F.transform(
-            windows,
-            lambda s: F.concat_ws(
-                " ", *[s.getField(str(k)) for k in range(width)]
-            ),
-        )
-    )
-
-
-def shingle_hashes(text: Column, width: int = 3) -> Column:
-    """Array of distinct 64-bit shingle hashes WITHOUT building the
-    shingle strings: hash each word once, then combine ``width``
-    consecutive word hashes with one fixed-width ``xxhash64``.
-
-    Much cheaper than hashing :func:`word_shingles` output (no
-    O(words × width) string allocation), and exactly what MinHash /
-    fingerprint consumers need — they never look at the shingle
-    text."""
-    words = _words(text)
-    word_h = F.transform(words, lambda w: F.xxhash64(w))
-    windows = _sliding_zip(word_h, width)
-    return F.array_distinct(
-        F.transform(
-            windows,
-            lambda s: F.xxhash64(*[s.getField(str(k)) for k in range(width)]),
-        )
-    )
-
-
-def positional_shingle_hashes(text: Column, width: int = 3) -> Column:
-    """:func:`shingle_hashes` without the distinct: window hashes in
-    document order, duplicates kept — substring-span detection needs
-    run contiguity, which a distinct-set would destroy."""
-    words = _words(text)
-    word_h = F.transform(words, lambda w: F.xxhash64(w))
-    windows = _sliding_zip(word_h, width)
-    return F.transform(
-        windows,
-        lambda s: F.xxhash64(*[s.getField(str(k)) for k in range(width)]),
-    )
 
 
 def extract_domain(url: Column) -> Column:

@@ -1,4 +1,4 @@
-"""Arrow-vectorized text kernels for the corpus-scale dedup operators.
+"""Arrow-vectorized text kernels: the ``arrow`` hash family.
 
 Why a Pandas UDF here, in an engine that is otherwise codegen-only:
 Spark's higher-order array functions (``transform`` / ``arrays_zip`` /
@@ -11,16 +11,19 @@ The Arrow kernel below does the same work at ~40 µs/doc single-thread
 and — being a separate ``ArrowEvalPython`` stage — forms a natural
 barrier the optimizer cannot inline into downstream operators.
 
-The codegen implementations in :mod:`aligned_spark.functions.text`
-remain the default for expression-level use (no Python runtime
-required); the dedup *operators* default to this Arrow path.
+:data:`ARROW` bundles these kernels as the production
+:class:`~aligned_spark.functions.hash_family.HashFamily`, the default
+``impl`` of the dedup operators.
 
 Hash family: ``pd.util.hash_array`` (SipHash-1-3 with pandas' fixed
 default key — deterministic across processes) for shingle hashes, and
 wrapping odd-multiplier linear maps ``a·h + b (mod 2^64)`` — bijections
-on Z/2^64 — for the MinHash permutation family. Values therefore
-differ from the xxhash64-based codegen path; MinHash semantics
-(collision probability ≈ Jaccard) are unchanged.
+on Z/2^64 — for the MinHash permutation family. Two pieces hash with
+Spark's JVM ``xxhash64`` instead: the per-band hash over a MinHash
+signature slice, and the whitespace-token windows that
+``remove_duplicate_spans`` cuts. Values therefore differ from the
+SQL-replayable ``poly`` family (:mod:`aligned_spark.functions.text_poly`);
+MinHash semantics (collision probability ≈ Jaccard) are the same.
 
 Reference capability: corpus near-dup detection, compare
 ``nearest_n_to``-style usage in ``aligned/sources/lancedb.py:158-212``
@@ -34,15 +37,29 @@ from itertools import chain
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, LongType
+
+from aligned_spark.functions.hash_family import HashFamily
+from aligned_spark.functions.text import _sliding_zip, ws_tokens
 
 # Tokens: runs of letters (incl. latin-1 accents), lowercased — must
 # stay in sync with aligned_spark.functions.text._words.
 _TOKEN_RE = r"[a-zà-ÿ]+"
 
 _MIX = np.uint64(0x9E3779B97F4A7C15)  # golden-ratio odd constant
+
+_LONGS = ArrayType(LongType())
+
+
+def _batch_udf(kernel, return_type, text: Column, *args) -> Column:
+    """Column of ``kernel(texts, *args)``, one call per Arrow batch."""
+
+    def _kernel(s: pd.Series) -> pd.Series:
+        return kernel(s, *args)
+
+    return F.pandas_udf(_kernel, return_type)(text)
 
 
 def _flat_token_hashes(
@@ -118,12 +135,7 @@ def window_hashes_arrow(text: Column, width: int = 8) -> Column:
     """Arrow-batched positional window hashes (document order,
     duplicates kept) — SipHash family twin of
     :func:`aligned_spark.functions.text_poly.poly_window_hashes_arrow`."""
-
-    def _kernel(s: pd.Series) -> pd.Series:
-        return window_hash_lists(s, width)
-
-    udf = F.pandas_udf(_kernel, ArrayType(LongType()))
-    return udf(text)
+    return _batch_udf(window_hash_lists, _LONGS, text, width)
 
 
 # Deterministic permutation family: odd multipliers + offsets.
@@ -304,26 +316,15 @@ def rolling_fingerprint_values(
 
 
 def rolling_fingerprint_arrow(text: Column, width: int = 8) -> Column:
-    """Arrow-batched equivalent of
-    :func:`aligned_spark.functions.text.rolling_fingerprint`
-    (different hash family)."""
-
-    def _kernel(s: pd.Series) -> pd.Series:
-        return rolling_fingerprint_values(s, width)
-
-    udf = F.pandas_udf(_kernel, LongType())
-    return udf(text)
+    """Arrow-batched :func:`rolling_fingerprint_values`."""
+    return _batch_udf(rolling_fingerprint_values, LongType(), text, width)
 
 
-def simhash_lists(
-    texts: pd.Series, bits: int = 64, width: int = 3
-) -> pd.Series:
-    """SimHash (majority vote over shingle-hash bits) per document,
-    as int64; documents with no shingles get 0. Fully vectorized:
-    unpack window-hash bits to an (n_windows × 64) matrix, segment-sum
-    with ``np.add.reduceat``, majority-compare, repack."""
-    if bits != 64:
-        raise ValueError("arrow simhash supports bits=64 only")
+def simhash_lists(texts: pd.Series, width: int = 3) -> pd.Series:
+    """64-bit SimHash (majority vote over shingle-hash bits) per
+    document, as int64; documents with no shingles get 0. Fully
+    vectorized: unpack window-hash bits to an (n_windows × 64) matrix,
+    segment-sum with ``np.add.reduceat``, majority-compare, repack."""
     counts, flat = _flat_token_hashes(texts)
     starts, wcounts, windows = _window_hashes(counts, flat, width)
     out = np.zeros(len(counts), dtype=np.int64)
@@ -341,28 +342,14 @@ def simhash_lists(
     return pd.Series(out, index=texts.index)
 
 
-def simhash_arrow(text: Column, bits: int = 64, width: int = 3) -> Column:
-    """Arrow-batched SimHash column (hash family differs from the
-    codegen :func:`aligned_spark.operators.dedup.simhash`; Hamming
-    locality semantics are the same)."""
-
-    def _kernel(s: pd.Series) -> pd.Series:
-        return simhash_lists(s, bits, width)
-
-    udf = F.pandas_udf(_kernel, LongType())
-    return udf(text)
+def simhash_arrow(text: Column, width: int = 3) -> Column:
+    """Arrow-batched 64-bit SimHash column (:func:`simhash_lists`)."""
+    return _batch_udf(simhash_lists, LongType(), text, width)
 
 
 def shingle_hashes_arrow(text: Column, width: int = 3) -> Column:
-    """Arrow-batched equivalent of
-    :func:`aligned_spark.functions.text.shingle_hashes` (different hash
-    family — see module docstring)."""
-
-    def _kernel(s: pd.Series) -> pd.Series:
-        return shingle_hash_lists(s, width)
-
-    udf = F.pandas_udf(_kernel, ArrayType(LongType()))
-    return udf(text)
+    """Arrow-batched distinct shingle hashes (:func:`shingle_hash_lists`)."""
+    return _batch_udf(shingle_hash_lists, _LONGS, text, width)
 
 
 def minhash_signature_arrow(
@@ -370,9 +357,66 @@ def minhash_signature_arrow(
 ) -> Column:
     """MinHash signature column (array<long>, length ``num_hashes``;
     empty for docs with < ``width`` tokens), Arrow-batched."""
+    return _batch_udf(minhash_signature_lists, _LONGS, text, num_hashes, width)
 
-    def _kernel(s: pd.Series) -> pd.Series:
-        return minhash_signature_lists(s, num_hashes, width)
 
-    udf = F.pandas_udf(_kernel, ArrayType(LongType()))
-    return udf(text)
+def ws_window_xxhashes(text: Column, width: int) -> Column:
+    """Whitespace-token window hashes: each :func:`ws_tokens` word is
+    hashed with ``xxhash64``, then every ``width`` consecutive word
+    hashes fold with one fixed-arity ``xxhash64``."""
+    tokens = ws_tokens(text)
+    word_h = F.transform(tokens, lambda w: F.xxhash64(w))
+    # Docs shorter than ``width`` tokens have NO windows. Without the
+    # guard, _sliding_zip emits one NULL-padded window whose xxhash64
+    # silently skips the NULL fields, so two identical short docs
+    # would share a window hash and be fully deleted — diverging from
+    # the oracle-verified poly family, which emits zero windows.
+    return F.when(
+        F.size(tokens) >= width,
+        F.transform(
+            _sliding_zip(word_h, width),
+            lambda s: F.xxhash64(*[s.getField(str(k)) for k in range(width)]),
+        ),
+    ).otherwise(F.array().cast("array<bigint>"))
+
+
+def band_hash_rows(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    num_hashes: int,
+    bands: int,
+    width: int,
+) -> DataFrame:
+    """``(id_col, __bh)``: one ``xxhash64`` per band over its slice of
+    the Arrow MinHash signature. Two projections, so the signature
+    UDF runs once per document and the band hashes read its column."""
+    rows_per_band = num_hashes // bands
+    with_sig = df.select(
+        F.col(id_col),
+        minhash_signature_arrow(F.col(text_col), num_hashes, width).alias(
+            "__sig"
+        ),
+    ).filter(F.size("__sig") > 0)
+    band_hashes = [
+        F.xxhash64(
+            *[
+                F.element_at(F.col("__sig"), b * rows_per_band + r + 1)
+                for r in range(rows_per_band)
+            ]
+        )
+        for b in range(bands)
+    ]
+    return with_sig.select(id_col, F.array(*band_hashes).alias("__bh"))
+
+
+ARROW = HashFamily(
+    name="arrow",
+    shingle_hashes=shingle_hashes_arrow,
+    window_hashes=window_hashes_arrow,
+    ws_window_hashes=ws_window_xxhashes,
+    fingerprint=rolling_fingerprint_arrow,
+    simhash=simhash_arrow,
+    simhash_bits=64,
+    band_hashes=band_hash_rows,
+)

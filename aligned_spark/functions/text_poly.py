@@ -1,9 +1,9 @@
 """SQL-mirrorable polynomial hash family for oracle-verified dedup.
 
-The production dedup paths hash with xxhash64 (``impl="codegen"``) or
-SipHash (``impl="arrow"``) — neither is computable in ANSI SQL, so the
-driver queries built on them could only ever be rows-only checked.
-This module adds a third family, ``impl="poly"``, whose every step is
+The production dedup family (``impl="arrow"``) hashes with SipHash and
+xxhash64 — neither is computable in ANSI SQL, so the registered
+queries built on it can only be rows-only checked. This module defines the
+second family, :data:`POLY` (``impl="poly"``), whose every step is
 exact modular integer arithmetic
 
     h = fold over items: (acc * B + item) mod P,   P = 2^61 - 1
@@ -17,9 +17,10 @@ LSH oracle uses with its hyperplane literals.
 
 Hash quality is ample for dedup (Mersenne-prime modulus, odd bases);
 throughput is a per-document Python loop, so the corpus-scale
-production paths stay ``arrow``/``codegen`` — banding, pigeonhole
-chunking, and keep-min semantics are shared code either way
-(``operators/dedup.py`` dispatches on ``impl``).
+production path stays ``arrow`` — banding, pigeonhole chunking, and
+keep-min semantics are shared code either way (the operators in
+``operators/dedup.py`` take a
+:class:`~aligned_spark.functions.hash_family.HashFamily`).
 
 Reference capability: corpus near-dup detection (the aligned reference
 has no corpus dedup operator; this extends the training-data surface —
@@ -32,11 +33,13 @@ import re
 from functools import lru_cache
 
 import pandas as pd
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, LongType
 
-# Must stay in sync across the three implementations AND the SQL
+from aligned_spark.functions.hash_family import HashFamily
+
+# Must stay in sync across the two families AND the SQL
 # builders below: tokens are runs of [a-zà-ÿ] on the lowercased text
 # (same class as functions.text._words / text_arrow._TOKEN_RE).
 _TOKEN_RE = re.compile(r"[a-zà-ÿ]+")
@@ -134,57 +137,47 @@ def fingerprint_value(text: str | None, width: int) -> int | None:
     return min(sh) if sh else None
 
 
+def shingle_set(text: str | None, width: int) -> list[int]:
+    """Distinct shingle hashes, sorted (exact-Jaccard verification)."""
+    return sorted(set(window_hashes(text, width)))
+
+
 # --------------------------------------------------------------------------
 # Spark Column wrappers (Arrow-batched; per-doc Python loop inside)
 # --------------------------------------------------------------------------
+
+_LONGS = ArrayType(LongType())
+
+
+def _per_doc_udf(fn, return_type, text: Column, *args) -> Column:
+    """Column of ``fn(doc, *args)`` for every document of ``text``."""
+
+    def _kernel(s: pd.Series) -> pd.Series:
+        return pd.Series([fn(t, *args) for t in s], index=s.index, dtype=object)
+
+    return F.pandas_udf(_kernel, return_type)(text)
 
 
 def poly_band_hashes_arrow(
     text: Column, num_hashes: int, bands: int, width: int
 ) -> Column:
-    def _kernel(s: pd.Series) -> pd.Series:
-        return pd.Series(
-            [band_hashes(t, num_hashes, bands, width) for t in s],
-            index=s.index,
-            dtype=object,
-        )
-
-    return F.pandas_udf(_kernel, ArrayType(LongType()))(text)
+    return _per_doc_udf(band_hashes, _LONGS, text, num_hashes, bands, width)
 
 
 def poly_shingle_hashes_arrow(text: Column, width: int) -> Column:
-    """Distinct sorted shingle hashes (for exact-Jaccard verification)."""
-
-    def _kernel(s: pd.Series) -> pd.Series:
-        return pd.Series(
-            [sorted(set(window_hashes(t, width))) for t in s],
-            index=s.index,
-            dtype=object,
-        )
-
-    return F.pandas_udf(_kernel, ArrayType(LongType()))(text)
+    """Distinct sorted shingle hashes (:func:`shingle_set`)."""
+    return _per_doc_udf(shingle_set, _LONGS, text, width)
 
 
 def poly_window_hashes_arrow(text: Column, width: int) -> Column:
     """Positional sliding-window hashes in document order (duplicates
     kept) — the substring-span detection input; mirror of
     :func:`sql_window_hashes`."""
-
-    def _kernel(s: pd.Series) -> pd.Series:
-        return pd.Series(
-            [window_hashes(t, width) for t in s],
-            index=s.index,
-            dtype=object,
-        )
-
-    return F.pandas_udf(_kernel, ArrayType(LongType()))(text)
+    return _per_doc_udf(window_hashes, _LONGS, text, width)
 
 
 def poly_simhash_arrow(text: Column, width: int) -> Column:
-    def _kernel(s: pd.Series) -> pd.Series:
-        return pd.Series([simhash_value(t, width) for t in s], index=s.index)
-
-    return F.pandas_udf(_kernel, LongType())(text)
+    return _per_doc_udf(simhash_value, LongType(), text, width)
 
 
 def trigram_bucket_counts(text: str | None, size: int) -> list[int]:
@@ -201,14 +194,7 @@ def trigram_bucket_counts(text: str | None, size: int) -> list[int]:
 
 
 def poly_trigram_counts_arrow(text: Column, size: int) -> Column:
-    def _kernel(s: pd.Series) -> pd.Series:
-        return pd.Series(
-            [trigram_bucket_counts(t, size) for t in s],
-            index=s.index,
-            dtype=object,
-        )
-
-    return F.pandas_udf(_kernel, ArrayType(LongType()))(text)
+    return _per_doc_udf(trigram_bucket_counts, _LONGS, text, size)
 
 
 def sql_trigram_buckets(col: str, size: int) -> str:
@@ -222,14 +208,7 @@ def sql_trigram_buckets(col: str, size: int) -> str:
 
 
 def poly_fingerprint_arrow(text: Column, width: int) -> Column:
-    def _kernel(s: pd.Series) -> pd.Series:
-        return pd.Series(
-            [fingerprint_value(t, width) for t in s],
-            index=s.index,
-            dtype=object,
-        )
-
-    return F.pandas_udf(_kernel, LongType())(text)
+    return _per_doc_udf(fingerprint_value, LongType(), text, width)
 
 
 # --------------------------------------------------------------------------
@@ -326,14 +305,7 @@ def ws_window_hashes(text: str | None, width: int) -> list[int]:
 
 
 def poly_ws_window_hashes_arrow(text: Column, width: int) -> Column:
-    def _kernel(s: pd.Series) -> pd.Series:
-        return pd.Series(
-            [ws_window_hashes(t, width) for t in s],
-            index=s.index,
-            dtype=object,
-        )
-
-    return F.pandas_udf(_kernel, ArrayType(LongType()))(text)
+    return _per_doc_udf(ws_window_hashes, _LONGS, text, width)
 
 
 def sql_ws_word_hashes(col: str) -> str:
@@ -350,3 +322,33 @@ def sql_ws_word_hashes(col: str) -> str:
         f"c -> CAST(ord(c) AS HUGEINT))), "
         f"(a, b) -> (a * {CHAR_B} + b) % {P}) AS BIGINT))"
     )
+
+
+def band_hash_rows(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    num_hashes: int,
+    bands: int,
+    width: int,
+) -> DataFrame:
+    """``(id_col, __bh)``: the kernel's per-band folds
+    (:func:`band_hashes`), for documents with at least one shingle."""
+    return df.select(
+        F.col(id_col),
+        poly_band_hashes_arrow(F.col(text_col), num_hashes, bands, width).alias(
+            "__bh"
+        ),
+    ).filter(F.size("__bh") > 0)
+
+
+POLY = HashFamily(
+    name="poly",
+    shingle_hashes=poly_shingle_hashes_arrow,
+    window_hashes=poly_window_hashes_arrow,
+    ws_window_hashes=poly_ws_window_hashes_arrow,
+    fingerprint=poly_fingerprint_arrow,
+    simhash=poly_simhash_arrow,
+    simhash_bits=SIMHASH_BITS,
+    band_hashes=band_hash_rows,
+)

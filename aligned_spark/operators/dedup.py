@@ -3,8 +3,11 @@
 Reference capability surface: the aligned reference has no dedup
 operator beyond entity-distinct (``DropDuplicateEntities``,
 ``aligned/retrieval_job.py:2110-2129``); these operators extend the
-engine for LLM-corpus workloads (BASELINE north-star) on top of the
-codegen text primitives in :mod:`aligned_spark.functions.text`.
+engine for LLM-corpus workloads (BASELINE north-star).
+
+The text operators take their hashes from the
+:class:`~aligned_spark.functions.hash_family.HashFamily` that their
+``impl`` names, resolved before any plan is built.
 
 Scale design (100 TB):
 
@@ -13,7 +16,7 @@ Scale design (100 TB):
   payload, not the routing; with AQE skew-join splitting a hot key
   (e.g. the empty document) cannot pin a single task.
 - MinHash-LSH is the classic sub-quadratic near-dup: per-row signature
-  (codegen-only hashing — no UDFs), explode to ``bands`` rows, shuffle
+  (one Arrow-batched kernel pass), explode to ``bands`` rows, shuffle
   on the (band, band-hash) bucket, and only verify candidates that
   collide in ≥1 band. Candidate count ≈ O(n·dup_rate), never O(n²).
 - ``minhash_dedup`` drops any doc with a near-dup of smaller id
@@ -28,11 +31,8 @@ from pyspark.sql import Column, DataFrame, Window as W
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from aligned_spark.functions.text import (
-    rolling_fingerprint,
-    shingle_hashes,
-    word_shingles,
-)
+from aligned_spark.functions.hash_family import hash_family
+from aligned_spark.functions.text import ws_tokens
 
 
 def exact_dedup(
@@ -61,25 +61,11 @@ def fingerprint_dedup(
     impl: str = "arrow",
 ) -> DataFrame:
     """Near-exact dedup on the winnowing-style content fingerprint
-    (:func:`~aligned_spark.functions.text.rolling_fingerprint`):
-    documents sharing their minimal rolling hash collapse to one row
-    (smallest ``order_col`` wins). ``impl`` as in :func:`_band_rows`
-    — "arrow" (vectorized kernel, default) or "codegen"."""
-    if impl == "arrow":
-        from aligned_spark.functions.text_arrow import (
-            rolling_fingerprint_arrow,
-        )
-
-        fp = rolling_fingerprint_arrow(F.col(text_col), width)
-    elif impl == "codegen":
-        fp = rolling_fingerprint(F.col(text_col), width)
-    elif impl == "poly":
-        from aligned_spark.functions.text_poly import poly_fingerprint_arrow
-
-        fp = poly_fingerprint_arrow(F.col(text_col), width)
-    else:
-        raise ValueError(f"unknown impl: {impl!r}")
-    out = df.withColumn("__fp", fp)
+    (the minimum ``width``-word window hash): documents sharing their
+    fingerprint collapse to one row (smallest ``order_col`` wins).
+    ``impl`` names the hash family: "arrow" (default) or "poly"."""
+    family = hash_family(impl)
+    out = df.withColumn("__fp", family.fingerprint(F.col(text_col), width))
     w = W.partitionBy("__fp").orderBy(F.col(order_col).asc())
     return (
         out.withColumn("__rn", F.row_number().over(w))
@@ -88,47 +74,6 @@ def fingerprint_dedup(
         .filter((F.col("__rn") == 1) | F.col("__fp").isNull())
         .drop("__rn", "__fp")
     )
-
-
-def minhash_from_shingles(shingles: Column, num_hashes: int = 32) -> Column:
-    """MinHash signature from an (already materialized) shingle array.
-
-    Pure codegen: per seed, ``array_min(transform(shingles,
-    s -> xxhash64(s, seed)))`` — no UDF, no shuffle, no state.
-    IMPORTANT: pass a *column reference* to a projected shingle array,
-    not the shingle expression itself — Spark does not CSE across the
-    ``num_hashes`` sub-expressions, so an inline expression would
-    re-tokenize the document ``num_hashes`` times.
-
-    DO NOT rewrite the seed loop as a nested higher-order function
-    (``transform(sequence(...), seed -> array_min(transform(...)))``):
-    measured at sf0.1 it evaluates ~30× slower — a nested lambda
-    referencing an outer lambda variable drops the whole subtree to
-    per-element interpreted eval. For corpus-scale dedup prefer
-    ``impl="arrow"`` on the operators below, which sidesteps HOF
-    evaluation entirely."""
-
-    def _hasher(seed: int):
-        # closure factory, NOT `lambda s, i=i`: a two-parameter lambda
-        # is bound by PySpark's HOF layer as (element, array_index),
-        # silently replacing the seed with the position
-        return lambda s: F.xxhash64(s, F.lit(seed))
-
-    return F.array(
-        *[
-            F.array_min(F.transform(shingles, _hasher(i)))
-            for i in range(num_hashes)
-        ]
-    )
-
-
-def minhash_signature(
-    text: Column, num_hashes: int = 32, shingle_width: int = 3
-) -> Column:
-    """Inline MinHash signature over word shingles. Prefer the
-    two-projection form (``word_shingles`` → ``minhash_from_shingles``)
-    in operators — see the CSE note above."""
-    return minhash_from_shingles(word_shingles(text, shingle_width), num_hashes)
 
 
 def _band_rows(
@@ -140,84 +85,20 @@ def _band_rows(
     shingle_width: int,
     impl: str = "arrow",
 ) -> DataFrame:
-    """(id, band_id, band_hash) rows — one per band per doc.
+    """(id, band_id, band_hash) rows — one per band per doc, from the
+    ``impl`` family's band hashes; banding semantics are the same for
+    every family.
 
-    ``impl="arrow"`` (default) computes signatures in one vectorized
-    Arrow kernel (~10× the interpreted-HOF path at corpus scale, and
-    the Python stage is a barrier the optimizer cannot inline into the
-    Generate below — the codegen path pays a structural 2× there).
-    ``impl="codegen"`` keeps the pure-JVM xxhash64 path: zero Python
-    runtime, bit-stable against the scalar text functions.
-    ``impl="poly"`` uses the SQL-mirrorable polynomial family
-    (:mod:`aligned_spark.functions.text_poly`) — the oracle-verified
-    correctness path; banding semantics are identical."""
+    Documents with no shingle are excluded: their identical
+    signatures would all collide into ONE bucket — quadratic pair
+    blowup at corpus scale. Route empty-doc dedup through
+    exact_dedup instead."""
+    family = hash_family(impl)
     if num_hashes % bands != 0:
         raise ValueError("num_hashes must be divisible by bands")
-    rows_per_band = num_hashes // bands
-    if impl == "poly":
-        from aligned_spark.functions.text_poly import poly_band_hashes_arrow
-
-        wb = df.select(
-            F.col(id_col),
-            poly_band_hashes_arrow(
-                F.col(text_col), num_hashes, bands, shingle_width
-            ).alias("__bh"),
-        ).filter(F.size("__bh") > 0)
-        return wb.select(
-            id_col, F.posexplode("__bh").alias("band_id", "band_hash")
-        )
-    if impl == "arrow":
-        from aligned_spark.functions.text_arrow import (
-            minhash_signature_arrow,
-        )
-
-        with_sig = df.select(
-            F.col(id_col),
-            minhash_signature_arrow(
-                F.col(text_col), num_hashes, shingle_width
-            ).alias("__sig"),
-        ).filter(F.size("__sig") > 0)
-    elif impl == "codegen":
-        # two projections: shingles materialize ONCE, then num_hashes
-        # array_mins read the column (no CSE across expressions
-        # otherwise)
-        with_shingles = df.select(
-            F.col(id_col),
-            # hash-combined shingles: no shingle-string allocation
-            shingle_hashes(F.col(text_col), shingle_width).alias("__sh"),
-        ).filter(F.size("__sh") > 0)
-        with_sig = with_shingles.select(
-            F.col(id_col),
-            minhash_from_shingles(F.col("__sh"), num_hashes).alias("__sig"),
-        )
-    else:
-        raise ValueError(f"unknown impl: {impl!r}")
-    # empty/short docs are excluded in both paths: their (identical)
-    # signatures would all collide into ONE bucket — quadratic pair
-    # blowup at corpus scale. Route empty-doc dedup through
-    # exact_dedup instead.
-    band_structs = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band_id"),
-                F.xxhash64(
-                    *[
-                        F.element_at(F.col("__sig"), b * rows_per_band + r + 1)
-                        for r in range(rows_per_band)
-                    ]
-                ).alias("band_hash"),
-            )
-            for b in range(bands)
-        ]
-    )
-    return (
-        with_sig.select(id_col, F.explode(band_structs).alias("__band"))
-        .select(
-            id_col,
-            F.col("__band.band_id").alias("band_id"),
-            F.col("__band.band_hash").alias("band_hash"),
-        )
-    )
+    return family.band_hashes(
+        df, id_col, text_col, num_hashes, bands, shingle_width
+    ).select(id_col, F.posexplode("__bh").alias("band_id", "band_hash"))
 
 
 def minhash_near_dup_pairs(
@@ -244,6 +125,7 @@ def minhash_near_dup_pairs(
     tiny relative to the corpus (id + 2 longs × bands)."""
     from pyspark.storagelevel import StorageLevel
 
+    family = hash_family(impl)
     banded = _band_rows(
         df, id_col, text_col, num_hashes, bands, shingle_width, impl
     )
@@ -262,23 +144,11 @@ def minhash_near_dup_pairs(
     )
     if jaccard_threshold is None:
         return pairs
-    if impl == "arrow":
-        from aligned_spark.functions.text_arrow import shingle_hashes_arrow
-
-        sh_col = shingle_hashes_arrow(F.col(text_col), shingle_width)
-    elif impl == "poly":
-        from aligned_spark.functions.text_poly import (
-            poly_shingle_hashes_arrow,
-        )
-
-        sh_col = poly_shingle_hashes_arrow(F.col(text_col), shingle_width)
-    else:
-        sh_col = shingle_hashes(F.col(text_col), shingle_width)
     shingled = df.select(
         F.col(id_col),
         # jaccard over shingle-hash sets == jaccard over shingle sets
         # (collisions negligible at 64 bits), at a fraction of the cost
-        sh_col.alias("__sh"),
+        family.shingle_hashes(F.col(text_col), shingle_width).alias("__sh"),
     )
     pairs = (
         pairs.join(
@@ -560,36 +430,6 @@ def semantic_dedup(
     return df.join(drop, on=id_col, how="left_anti")
 
 
-def simhash(text: Column, bits: int = 64, shingle_width: int = 3) -> Column:
-    """SimHash signature: sign-sum of per-shingle hash bits.
-
-    Codegen-only: for each bit, count shingles whose hash has that bit
-    set vs unset; bit is 1 when set-count wins. 64 aggregate
-    expressions over one shingle array — heavy codegen but zero
-    Python and zero shuffle."""
-    shingles = shingle_hashes(text, shingle_width)
-    n = F.size(shingles).cast("long")
-
-    def _ones_counter(bit_idx: int):
-        # closure factory: a default-arg lambda (i=i) would have arity
-        # 3 and PySpark's HOF binder would misread it as (acc, x, idx)
-        return lambda acc, h: acc + F.shiftrightunsigned(h, bit_idx).bitwiseAND(
-            F.lit(1)
-        )
-
-    bit_cols = []
-    for i in range(bits):
-        ones = F.aggregate(
-            shingles, F.lit(0).cast("long"), _ones_counter(i)
-        )
-        bit = (ones * 2 > n).cast("long")
-        bit_cols.append(F.shiftleft(bit, i))
-    out = bit_cols[0]
-    for c in bit_cols[1:]:
-        out = out.bitwiseOR(c)
-    return out
-
-
 def simhash_near_dup_pairs(
     df: DataFrame,
     id_col: str,
@@ -601,11 +441,11 @@ def simhash_near_dup_pairs(
     """Near-duplicate pairs by SimHash Hamming distance (the
     classic Google-crawl dedup shape).
 
-    Pigeonhole banding: a 64-bit simhash splits into
-    ``max_hamming + 1`` chunks — two signatures within
-    ``max_hamming`` bits MUST agree exactly on at least one chunk, so
-    the self-join runs on (chunk_id, chunk_value) buckets, never the
-    corpus cross product. Candidates verify with
+    Pigeonhole banding: the family's simhash (64 bits for arrow, 61
+    for poly) splits into ``max_hamming + 1`` chunks — two signatures
+    within ``max_hamming`` bits MUST agree exactly on at least one
+    chunk, so the self-join runs on (chunk_id, chunk_value) buckets,
+    never the corpus cross product. Candidates verify with
     ``bit_count(xor) <= max_hamming`` — all codegen. Output:
     ``{id}_a < {id}_b, hamming``.
 
@@ -613,34 +453,20 @@ def simhash_near_dup_pairs(
     exact, not probabilistic like MinHash-LSH)."""
     from pyspark.storagelevel import StorageLevel
 
-    if impl == "arrow":
-        from aligned_spark.functions.text_arrow import simhash_arrow
-
-        sig_bits = 64
-        sig_col = simhash_arrow(F.col(text_col), 64, shingle_width)
-    elif impl == "codegen":
-        sig_bits = 64
-        sig_col = simhash(F.col(text_col), 64, shingle_width)
-    elif impl == "poly":
-        from aligned_spark.functions.text_poly import (
-            SIMHASH_BITS,
-            poly_simhash_arrow,
-        )
-
-        sig_bits = SIMHASH_BITS
-        sig_col = poly_simhash_arrow(F.col(text_col), shingle_width)
-    else:
-        raise ValueError(f"unknown impl: {impl!r}")
+    family = hash_family(impl)
     n_chunks = max_hamming + 1
     # chunk boundaries must PARTITION all sig bits (pigeonhole breaks
     # if any bit is uncovered); distribute the remainder
-    base, rem = divmod(sig_bits, n_chunks)
+    base, rem = divmod(family.simhash_bits, n_chunks)
     widths = [base + 1] * rem + [base] * (n_chunks - rem)
     offsets = [sum(widths[:i]) for i in range(n_chunks)]
     # sig==0 ⇒ un-shingleable doc: excluded (they'd form one
     # quadratic bucket; route through exact_dedup)
     sigs = (
-        df.select(F.col(id_col), sig_col.alias("__sig"))
+        df.select(
+            F.col(id_col),
+            family.simhash(F.col(text_col), shingle_width).alias("__sig"),
+        )
         .filter(F.col("__sig") != 0)
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
@@ -708,32 +534,19 @@ def decontaminate(
     are MBs against TBs), so it broadcasts and the corpus-side scan
     stays embarrassingly parallel at 100 TB — the only shuffle is the
     id-distinct on the (small) contaminated set. ``impl``: "arrow"
-    (SipHash kernel, production), "poly" (SQL-mirrorable — the
-    oracle-verified path), "codegen" (xxhash64)."""
-    if impl == "arrow":
-        from aligned_spark.functions.text_arrow import shingle_hashes_arrow
-
-        def sh(c):
-            return shingle_hashes_arrow(c, shingle_width)
-    elif impl == "poly":
-        from aligned_spark.functions.text_poly import (
-            poly_shingle_hashes_arrow,
-        )
-
-        def sh(c):
-            return poly_shingle_hashes_arrow(c, shingle_width)
-    elif impl == "codegen":
-
-        def sh(c):
-            return shingle_hashes(c, shingle_width)
-    else:
-        raise ValueError(f"unknown impl: {impl!r}")
-
+    (SipHash kernel, production) or "poly" (SQL-mirrorable — the
+    oracle-verified path)."""
+    family = hash_family(impl)
     bench_shingles = benchmark.select(
-        F.explode(sh(F.col(benchmark_text))).alias("__sh")
+        F.explode(
+            family.shingle_hashes(F.col(benchmark_text), shingle_width)
+        ).alias("__sh")
     ).distinct()
     pairs = corpus.select(
-        F.col(id_col), F.explode(sh(F.col(corpus_text))).alias("__sh")
+        F.col(id_col),
+        F.explode(
+            family.shingle_hashes(F.col(corpus_text), shingle_width)
+        ).alias("__sh"),
     )
     hit_ids = (
         pairs.join(F.broadcast(bench_shingles), on="__sh", how="left_semi")
@@ -836,31 +649,14 @@ def duplicate_spans(
     is collected on the driver; no O(n^2) pair set is ever formed —
     spans are detected through the hash census, not pairwise compare.
 
-    ``impl``: "arrow" (SipHash kernel, corpus-scale default),
-    "codegen" (pure-JVM xxhash64), "poly" (SQL-mirrorable family —
-    the oracle-verified correctness path; see
-    :mod:`aligned_spark.functions.text_poly`)."""
+    ``impl``: "arrow" (SipHash kernel, corpus-scale default) or
+    "poly" (SQL-mirrorable family — the oracle-verified correctness
+    path; see :mod:`aligned_spark.functions.text_poly`)."""
     from pyspark.storagelevel import StorageLevel
 
-    # positional variants only: the distinct-set shingle helpers used
+    # positional windows only: the distinct-set shingle hashes used
     # by MinHash would destroy run contiguity (and drop repeats)
-    if impl == "arrow":
-        from aligned_spark.functions.text_arrow import window_hashes_arrow
-
-        wh = window_hashes_arrow(F.col(text_col), width)
-    elif impl == "codegen":
-        from aligned_spark.functions.text import positional_shingle_hashes
-
-        wh = positional_shingle_hashes(F.col(text_col), width)
-    elif impl == "poly":
-        from aligned_spark.functions.text_poly import (
-            poly_window_hashes_arrow,
-        )
-
-        wh = poly_window_hashes_arrow(F.col(text_col), width)
-    else:
-        raise ValueError(f"unknown impl: {impl!r}")
-
+    wh = hash_family(impl).window_hashes(F.col(text_col), width)
     win = (
         df.select(F.col(id_col), wh.alias("__wh"))
         .select(id_col, F.posexplode("__wh").alias("__pos", "__h"))
@@ -967,34 +763,19 @@ def bloom_decontaminate(
     ``impl`` selects the shingle-hash family, as in
     :func:`decontaminate`.
     """
+    family = hash_family(impl)
     if m_bits <= 0 or m_bits % 32 or m_bits > (1 << 22):
         raise ValueError(
             "m_bits must be a positive multiple of 32, <= 2^22"
         )
-    if impl == "arrow":
-        from aligned_spark.functions.text_arrow import shingle_hashes_arrow
-
-        def sh(c):
-            return shingle_hashes_arrow(c, shingle_width)
-    elif impl == "poly":
-        from aligned_spark.functions.text_poly import (
-            poly_shingle_hashes_arrow,
-        )
-
-        def sh(c):
-            return poly_shingle_hashes_arrow(c, shingle_width)
-    elif impl == "codegen":
-
-        def sh(c):
-            return shingle_hashes(c, shingle_width)
-    else:
-        raise ValueError(f"unknown impl: {impl!r}")
 
     import numpy as np
 
     bench_hashes = (
         benchmark.select(
-            F.explode(sh(F.col(benchmark_text))).alias("__sh")
+            F.explode(
+                family.shingle_hashes(F.col(benchmark_text), shingle_width)
+            ).alias("__sh")
         )
         .distinct()
         .toPandas()["__sh"]
@@ -1043,7 +824,9 @@ def bloom_decontaminate(
             cond = cond & _bit_set(_bloom_pos(h, j, m_bits))
         return cond
 
-    flagged = F.exists(sh(F.col(corpus_text)), _probe)
+    flagged = F.exists(
+        family.shingle_hashes(F.col(corpus_text), shingle_width), _probe
+    )
     keep = flagged if keep_contaminated else ~flagged
     return corpus.filter(keep)
 
@@ -1077,48 +860,15 @@ def remove_duplicate_spans(
     shuffle on the id with an order-struct sort inside each group.
     Nothing collects on the driver; no pairwise compare.
 
-    ``impl``: "arrow"/"codegen" hash the whitespace tokens with
-    SipHash/xxhash64; "poly" is the SQL-replayable oracle path.
+    ``impl``: "arrow" hashes the whitespace tokens with xxhash64;
+    "poly" is the SQL-replayable oracle path.
     """
     from pyspark.storagelevel import StorageLevel
 
-    raw_tokens = F.filter(
-        F.split(F.coalesce(F.col(text_col), F.lit("")), r"\s+"),
-        lambda w: w != F.lit(""),
-    )
-    if impl == "poly":
-        from aligned_spark.functions.text_poly import (
-            poly_ws_window_hashes_arrow,
-        )
-
-        wh = poly_ws_window_hashes_arrow(F.col(text_col), width)
-    elif impl in ("arrow", "codegen"):
-        # token xxhash64 folds windowed with fixed-arity xxhash64 —
-        # the same shape as shingle_hashes but over raw ws tokens
-        from aligned_spark.functions.text import _sliding_zip
-
-        word_h = F.transform(raw_tokens, lambda w: F.xxhash64(w))
-        # Docs shorter than ``width`` tokens have NO windows. Without
-        # the guard, _sliding_zip emits one NULL-padded window whose
-        # xxhash64 silently skips the NULL fields, so two identical
-        # short docs would share a window hash and be fully deleted —
-        # diverging from the oracle-verified poly path, which emits
-        # zero windows for them.
-        wh = F.when(
-            F.size(raw_tokens) >= width,
-            F.transform(
-                _sliding_zip(word_h, width),
-                lambda s: F.xxhash64(
-                    *[s.getField(str(k)) for k in range(width)]
-                ),
-            ),
-        ).otherwise(F.array().cast("array<bigint>"))
-    else:
-        raise ValueError(f"unknown impl: {impl!r}")
-
+    wh = hash_family(impl).ws_window_hashes(F.col(text_col), width)
     base = df.select(
         F.col(id_col),
-        raw_tokens.alias("__toks"),
+        ws_tokens(F.col(text_col)).alias("__toks"),
         wh.alias("__wh"),
     ).persist(StorageLevel.MEMORY_AND_DISK)
 

@@ -236,9 +236,9 @@ def top_ngram_fraction(
 
     Documents with fewer than ``n`` words have no ``n``-grams and are
     excluded from the output (no signal ≠ signal 0). Counts are NOT
-    distinct-ed: repetition is exactly what we're measuring, so
-    :func:`~aligned_spark.functions.text.word_shingles` (distinct)
-    does not apply here."""
+    distinct-ed: repetition is exactly what we're measuring, so the
+    distinct shingle hashes of the dedup hash families do not apply
+    here."""
     words = _words(F.col(text_col))
     windows = _sliding_zip(words, n)
     grams = F.transform(

@@ -32,6 +32,8 @@ from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, Window as W
 from pyspark.sql import functions as F
 
+from aligned_spark.functions.hash_family import hash_family
+
 
 def dot_double(a: Column, b: Column) -> Column:
     """Left-fold dot product in double precision (order-stable)."""
@@ -586,8 +588,8 @@ def lsh_bucketed_pairs(
     the vectorized batch cosine — bit-identical to the fold (see
     :func:`_pair_cosine_arrow`) at ~100× the throughput, which matters
     because candidates ≈ Σ bucket² can be orders of magnitude larger
-    than the true pair set. ``"codegen"`` keeps everything JVM-side
-    (no Python workers) for environments where that's preferable.
+    than the true pair set. ``"codegen"`` is the JVM-side fold, kept
+    as the reference the Arrow kernel is tested bit-identical against.
 
     Plan shape: a low-partition input (one parquet file) would pin
     the bucket computation to one core, so small inputs are spread to
@@ -744,28 +746,13 @@ def prefix_jaccard_pairs(
     universes where prefix selectivity alone collapses toward the
     quadratic posting product.
 
-    ``impl``: "arrow" (SipHash shingle kernel, production), "poly"
-    (SQL-replayable family — the oracle path), "codegen" (xxhash64).
+    ``impl`` names the hash family: "arrow" (SipHash shingle kernel,
+    production) or "poly" (SQL-replayable family — the oracle path).
     """
+    family = hash_family(impl)
     if not 0 < threshold <= 1:
         raise ValueError(f"threshold must be in (0, 1], got {threshold}")
-    if impl == "arrow":
-        from aligned_spark.functions.text_arrow import shingle_hashes_arrow
-
-        sh = shingle_hashes_arrow(F.col(text_col), shingle_width)
-    elif impl == "poly":
-        from aligned_spark.functions.text_poly import (
-            poly_shingle_hashes_arrow,
-        )
-
-        sh = poly_shingle_hashes_arrow(F.col(text_col), shingle_width)
-    elif impl == "codegen":
-        from aligned_spark.functions.text import shingle_hashes
-
-        sh = shingle_hashes(F.col(text_col), shingle_width)
-    else:
-        raise ValueError(f"unknown impl: {impl!r}")
-
+    sh = family.shingle_hashes(F.col(text_col), shingle_width)
     sets = (
         df.select(F.col(id_col), F.array_distinct(sh).alias("__set"))
         .filter(F.size("__set") > 0)

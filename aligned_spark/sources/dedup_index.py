@@ -29,6 +29,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from aligned_spark.functions.hash_family import hash_family
 from aligned_spark.operators.dedup import _band_rows
 
 
@@ -41,6 +42,10 @@ class DedupIndexSource:
     bands: int = 8
     shingle_width: int = 3
     impl: str = "arrow"
+
+    def __post_init__(self) -> None:
+        # an unknown impl fails here, not after ingest's first job
+        hash_family(self.impl)
 
     def _bands_of(self, docs: DataFrame) -> DataFrame:
         return _band_rows(

@@ -238,7 +238,7 @@ def test_dedup_index_incremental_ingest(spark, tmp_path):
     other = ("completely different words about spark shuffles and "
              "partition pruning with adaptive query execution plans")
 
-    dix = DedupIndexSource(path=str(tmp_path / "ix"), impl="codegen")
+    dix = DedupIndexSource(path=str(tmp_path / "ix"))
     b1 = spark.createDataFrame(
         [(1, base), (2, other)], "doc_id long, text string"
     )
@@ -422,10 +422,10 @@ def test_duplicate_spans_known_structure(spark):
     assert out[3].dup_fraction == 0.0
 
 
-@pytest.mark.parametrize("impl", ["arrow", "codegen"])
+@pytest.mark.parametrize("impl", ["arrow"])
 def test_duplicate_spans_impl_parity(spark, impl):
-    """The production hash families (SipHash arrow kernel, xxhash64
-    codegen) must produce identical span statistics to the
+    """The production hash family (SipHash arrow kernel) must
+    produce identical span statistics to the
     oracle-verified poly family — same windows, different hashes,
     collisions astronomically unlikely at this scale."""
     from aligned_spark.operators.dedup import duplicate_spans
@@ -1170,7 +1170,7 @@ def test_prefix_jaccard_no_false_negatives(spark):
         if jac(a, b) >= t
     }
     assert brute  # the fixture really contains qualifying pairs
-    for impl in ("poly", "codegen", "arrow"):
+    for impl in ("poly", "arrow"):
         got = {
             (r.doc_id_a, r.doc_id_b)
             for r in prefix_jaccard_pairs(

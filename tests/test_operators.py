@@ -224,8 +224,8 @@ def test_dedup_and_jaccard(spark):
         exact_dedup,
         minhash_near_dup_pairs,
         ngram_jaccard,
-        simhash,
     )
+    from aligned_spark.functions.text_arrow import simhash_arrow
 
     text_a = "the quick brown fox jumps over the lazy dog again and again"
     text_b = text_a + " tail"
@@ -249,10 +249,8 @@ def test_dedup_and_jaccard(spark):
     ).collect()[0]
     assert j.same == 1.0 and j.diff < 0.2
 
-    s = docs.select(simhash(F.col("text")).alias("h")).collect()
+    s = docs.select(simhash_arrow(F.col("text")).alias("h")).collect()
     assert len({r.h for r in s}) >= 2  # identical texts share a simhash
-    h = {r.doc_id: None for r in docs.collect()}
-    del h
 
 
 def test_top_k_similar(spark):

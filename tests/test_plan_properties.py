@@ -509,9 +509,7 @@ def test_bloom_decontaminate_has_no_join(spark):
         [(99, "alpha beta gamma delta epsilon zeta eta theta")],
         "doc_id long, text string",
     )
-    out = bloom_decontaminate(
-        corpus, bench, "doc_id", "text", "text", impl="codegen"
-    )
+    out = bloom_decontaminate(corpus, bench, "doc_id", "text", "text")
     plan = plan_text(out, "simple")
     assert "Join" not in plan, plan
     assert "Exchange" not in plan, plan
@@ -527,8 +525,7 @@ def test_prefix_jaccard_no_cartesian(spark):
          for i in range(30)],
         "doc_id long, text string",
     )
-    out = prefix_jaccard_pairs(docs, "doc_id", "text", 0.7,
-                               impl="codegen")
+    out = prefix_jaccard_pairs(docs, "doc_id", "text", 0.7)
     plan = plan_text(out, "simple")
     assert "CartesianProduct" not in plan, plan
     assert "BroadcastNestedLoopJoin" not in plan, plan

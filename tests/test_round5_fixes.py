@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 def test_remove_spans_short_docs_all_impls_keep(spark):
     """Docs shorter than ``width`` tokens have no windows: two
     IDENTICAL short docs must survive untouched on EVERY impl. The
-    arrow/codegen path used to emit one NULL-padded window whose
+    arrow path used to emit one NULL-padded window whose
     xxhash64 skipped the NULLs, so identical short docs shared a
     hash and were fully deleted (n_removed=width) while the
     oracle-verified poly path kept them."""
@@ -29,7 +29,7 @@ def test_remove_spans_short_docs_all_impls_keep(spark):
         [(0, "tiny dup doc"), (1, "tiny dup doc"), (2, "x y")],
         "doc_id long, text string",
     )
-    for impl in ("poly", "arrow", "codegen"):
+    for impl in ("poly", "arrow"):
         out = {
             r.doc_id: r
             for r in remove_duplicate_spans(

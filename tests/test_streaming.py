@@ -671,7 +671,7 @@ def test_stream_dedup_ingest(spark, tmp_path):
             "append"
         ).parquet(inbox)
 
-    dix = DedupIndexSource(path=str(tmp_path / "ix"), impl="codegen")
+    dix = DedupIndexSource(path=str(tmp_path / "ix"))
     kept: list = []
 
     def sink(df, _id):

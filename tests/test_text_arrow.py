@@ -4,12 +4,15 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from aligned_spark.functions.text import shingle_hashes
 from aligned_spark.functions.text_arrow import (
     minhash_signature_lists,
     shingle_hash_lists,
     shingle_hashes_arrow,
 )
+from aligned_spark.functions.text_poly import poly_shingle_hashes_arrow
+from aligned_spark.operators import dedup
+from aligned_spark.operators.similarity import prefix_jaccard_pairs
+from aligned_spark.sources.dedup_index import DedupIndexSource
 
 
 def test_kernel_edges_no_spark():
@@ -25,7 +28,7 @@ def test_kernel_edges_no_spark():
     assert list(shingle_hash_lists(pd.Series([], dtype=object))) == []
 
 
-def test_shingle_count_parity_with_codegen(spark):
+def test_shingle_count_parity_with_poly(spark):
     docs = spark.createDataFrame(
         [
             (1, "the quick brown fox jumps over the lazy dog"),
@@ -36,13 +39,13 @@ def test_shingle_count_parity_with_codegen(spark):
         "doc_id long, text string",
     )
     got = docs.select(
-        F.size(shingle_hashes(F.col("text"), 3)).alias("cg"),
+        F.size(poly_shingle_hashes_arrow(F.col("text"), 3)).alias("po"),
         F.size(shingle_hashes_arrow(F.col("text"), 3)).alias("ar"),
     ).collect()
     # same tokenization + same distinct-window semantics → same counts
     # (hash values differ by family; collisions are ~2^-64)
     for r in got:
-        assert r.cg == r.ar
+        assert r.po == r.ar
 
 
 def test_pair_sets_agree_across_impls(spark):
@@ -70,9 +73,9 @@ def test_pair_sets_agree_across_impls(spark):
         ).collect()
         return {(r.doc_id_a, r.doc_id_b) for r in rows}
 
-    arrow, codegen = pair_set("arrow"), pair_set("codegen")
-    assert (1, 2) in arrow and (1, 2) in codegen
-    assert all(4 not in p for p in arrow | codegen)
+    arrow, poly = pair_set("arrow"), pair_set("poly")
+    assert (1, 2) in arrow and (1, 2) in poly
+    assert all(4 not in p for p in arrow | poly)
 
 
 def test_corpus_scores_bit_parity(spark):
@@ -144,7 +147,7 @@ def test_fingerprint_arrow_and_dedup(spark):
         [(1, body), (2, body), (3, "short one"), (4, "short two")],
         "doc_id long, text string",
     )
-    for impl in ("arrow", "codegen"):
+    for impl in ("arrow",):
         kept = sorted(
             r.doc_id
             for r in fingerprint_dedup(
@@ -193,7 +196,7 @@ def test_simhash_near_dup_pairs(spark):
         ],
         "doc_id long, text string",
     )
-    for impl in ("arrow", "codegen"):
+    for impl in ("arrow",):
         pairs = {
             (r.doc_id_a, r.doc_id_b): r.hamming
             for r in simhash_near_dup_pairs(
@@ -279,9 +282,106 @@ def test_connected_components_and_transitive_dedup(spark):
     assert kept == [1, 4]
 
 
-def test_unknown_impl_raises(spark):
-    from aligned_spark.operators.dedup import _band_rows
+#: every operator that takes a text hash family as ``impl``
+_IMPL_OPERATORS = {
+    "fingerprint_dedup": lambda d, impl: dedup.fingerprint_dedup(
+        d, "text", "doc_id", impl=impl
+    ),
+    "_band_rows": lambda d, impl: dedup._band_rows(
+        d, "doc_id", "text", 32, 8, 3, impl=impl
+    ),
+    "minhash_near_dup_pairs": lambda d, impl: dedup.minhash_near_dup_pairs(
+        d, "doc_id", "text", jaccard_threshold=0.5, impl=impl
+    ),
+    "simhash_near_dup_pairs": lambda d, impl: dedup.simhash_near_dup_pairs(
+        d, "doc_id", "text", impl=impl
+    ),
+    "decontaminate": lambda d, impl: dedup.decontaminate(
+        d, d, "doc_id", "text", "text", impl=impl
+    ),
+    "fuzzy_decontaminate": lambda d, impl: dedup.fuzzy_decontaminate(
+        d, d, "doc_id", "text", "text", impl=impl
+    ),
+    "bloom_decontaminate": lambda d, impl: dedup.bloom_decontaminate(
+        d, d, "doc_id", "text", "text", impl=impl
+    ),
+    "duplicate_spans": lambda d, impl: dedup.duplicate_spans(
+        d, "doc_id", "text", impl=impl
+    ),
+    "remove_duplicate_spans": lambda d, impl: dedup.remove_duplicate_spans(
+        d, "doc_id", "text", impl=impl
+    ),
+    "prefix_jaccard_pairs": lambda d, impl: prefix_jaccard_pairs(
+        d, "doc_id", "text", 0.5, impl=impl
+    ),
+    "DedupIndexSource": lambda d, impl: DedupIndexSource(
+        path="never-written", impl=impl
+    ),
+}
 
+
+@pytest.mark.parametrize("impl", ["codegen", "nope"])
+@pytest.mark.parametrize("op", sorted(_IMPL_OPERATORS))
+def test_unknown_impl_raises(spark, op, impl):
+    """An impl outside {arrow, poly} fails when the operator is
+    called, before it runs any Spark job."""
     docs = spark.createDataFrame([(1, "a b c d")], "doc_id long, text string")
-    with pytest.raises(ValueError, match="unknown impl"):
-        _band_rows(docs, "doc_id", "text", 32, 8, 3, impl="nope")
+    sc = spark.sparkContext
+    group = f"unknown-impl-{op}-{impl}"
+    sc.setJobGroup(group, "unknown impl check")
+    try:
+        with pytest.raises(ValueError, match="unknown impl"):
+            _IMPL_OPERATORS[op](docs, impl)
+        assert sc.statusTracker().getJobIdsForGroup(group) == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+
+
+#: empty, NULL and shorter-than-width documents included
+_PIN_DOCS = [
+    (1, "the quick brown fox jumps over the lazy dog"),
+    (2, "the quick brown fox jumps over the lazy dog"),
+    (3, "The Quick brown fox, jumps over the LAZY cat tonight"),
+    (4, ""),
+    (5, None),
+    (6, "two words"),
+    (7, "sphinx of black quartz judge my vow sphinx of black quartz judge"),
+    (8, "café naïve résumé über straße déjà vu  façade\tcoöperate\nend x"),
+]
+
+#: ``sum(xxhash64(struct(*)))`` of each arrow-family output over
+#: ``_PIN_DOCS`` (width 3; 16 hashes in 4 bands). The arrow family has
+#: no SQL oracle, so these pins are what keeps its values stable: a
+#: kernel change that moves any hash fails here
+_ARROW_PINS = {
+    "shingle_hashes": 3429860451613564835,
+    "window_hashes": 2158041548161510945,
+    "ws_window_hashes": 4267739935236035692,
+    "fingerprint": 1169907439804571082,
+    "simhash": 6592965776279740012,
+    "band_rows": -3392147527300810879,
+}
+
+
+def test_arrow_family_values_pinned(spark):
+    from aligned_spark.functions.text_arrow import ARROW
+
+    docs = spark.createDataFrame(_PIN_DOCS, "doc_id long, text string")
+    outputs = {
+        name: docs.select("doc_id", fn(F.col("text"), 3).alias("v"))
+        for name, fn in [
+            ("shingle_hashes", ARROW.shingle_hashes),
+            ("window_hashes", ARROW.window_hashes),
+            ("ws_window_hashes", ARROW.ws_window_hashes),
+            ("fingerprint", ARROW.fingerprint),
+            ("simhash", ARROW.simhash),
+        ]
+    }
+    outputs["band_rows"] = dedup._band_rows(
+        docs, "doc_id", "text", 16, 4, 3, "arrow"
+    )
+    got = {
+        name: df.selectExpr("sum(xxhash64(struct(*)))").first()[0]
+        for name, df in outputs.items()
+    }
+    assert got == _ARROW_PINS
