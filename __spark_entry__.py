@@ -9791,7 +9791,20 @@ def _model_ece(spark, sf_dir):
 # fixed), and the queries added this round. Union(r2 green, r3 window)
 # = every full-oracle query in the file.
 _PRIORITY: list[str] = [
-    # Slots 1-10 = the oracle-checked dedup, decontamination and
+    # Slots 1-10 = the registered point-in-time queries: the store
+    # path, whose as-of columns and windowed aggregates share one
+    # union pass per view, and every as-of direction of that pass.
+    "store_features_for",
+    "store_features_windowed",
+    "combine_two_views",
+    "agg_pit_window",
+    "join_pit_ttl",
+    "join_asof",
+    "join_asof_bucketed",
+    "join_asof_forward",
+    "join_asof_nearest",
+    "join_asof_bucketed_nearest",
+    # Slots 11-20 = the oracle-checked dedup, decontamination and
     # prefix-Jaccard queries, whose operators take their hashes from
     # one HashFamily object per family.
     "dedup_minhash",
@@ -9804,7 +9817,7 @@ _PRIORITY: list[str] = [
     "text_decontaminate_fuzzy",
     "text_decontaminate_bloom",
     "sim_prefix_jaccard_pairs",
-    # Slots 11-16 = the four TPC-H queries that missed the previous
+    # Slots 21-26 = the four TPC-H queries that missed the previous
     # window, and the two IVM queries whose regressions (_rolling
     # 0.90x, _windowed 0.74x) are still unclassified.
     "tpch_q11",
@@ -9813,7 +9826,7 @@ _PRIORITY: list[str] = [
     "tpch_q16",
     "store_incremental_aggregate_rolling",
     "store_incremental_aggregate_windowed",
-    # Slots 17-50 = the previous window's head: the IVM, change-feed,
+    # Slots 27-50 = the previous window's head: the IVM, change-feed,
     # MERGE and table-stream queries the shared table-log core
     # serves, then the oldest-verified rest.
     "store_incremental_aggregate",
@@ -9840,16 +9853,6 @@ _PRIORITY: list[str] = [
     "embed_prototypicality",
     "events_anomaly_mad",
     "events_cohort_retention",
-    "events_distinct_sketch",
-    "events_drift_ks",
-    "events_drift_psi",
-    "events_ewma",
-    "events_feature_cross",
-    "events_funnel",
-    "events_resample_linear",
-    "graph_pagerank",
-    "graph_pagerank_dangling",
-    "graph_triangles",
 ]
 
 

@@ -29,6 +29,7 @@ from pyspark.sql import Column, DataFrame, Window as W
 from pyspark.sql import functions as F
 
 from aligned_spark.expr import Expr
+from aligned_spark.operators.joins import pit_union_pass
 
 AggKind = Literal[
     "sum",
@@ -484,6 +485,11 @@ def hopping_aggregate(
     return grouped.withColumn(ts, stamp_col).drop("__w")
 
 
+#: kinds a trailing RANGE frame computes exactly (mean through Spark's
+#: sum+count ``avg``); the others need the join formulation
+STREAM_KINDS = frozenset({"sum", "mean", "min", "max", "count"})
+
+
 def pit_window_aggregate(
     facts: DataFrame,
     features: DataFrame,
@@ -498,90 +504,30 @@ def pit_window_aggregate(
     (``aggregate_over``, ``local/job.py:366-402``): for every fact row
     aggregate feature rows in ``[fact_ts - w, fact_ts]`` per entity.
 
-    Implementation: union facts+features per entity, order by time,
-    and compute the aggregate over a trailing range window evaluated
-    AT the fact rows — one shuffle, no join explosion (same
-    sorted-merge shape as the PIT join; the join+filter+groupBy
-    formulation would materialize every (fact, feature-in-window)
-    pair).
+    Streamable kinds (``STREAM_KINDS``) run in the shared point-in-time
+    pass (:func:`~aligned_spark.operators.joins.pit_union_pass`): union
+    facts+features per entity, order by time, and evaluate a trailing
+    range window AT the fact rows — one shuffle, one sort, one Window,
+    no join explosion (the join+filter+groupBy formulation would
+    materialize every (fact, feature-in-window) pair). Keys widen to a
+    common type, as in ``pit_join``. ``ContractStore.features_for``
+    computes a view's as-of columns in the same pass.
 
-    Only associative aggs (sum/count/min/max/mean via sum+count) are
-    exact here; for others we fall back to the join formulation.
+    Other kinds fall back to the join formulation, exact for every
+    kind. Output: the fact columns, then one column per spec.
     """
-    stream_ok = all(
-        a.kind in {"sum", "mean", "min", "max", "count"} for a in aggs
-    )
-    if not stream_ok:
+    if not all(a.kind in STREAM_KINDS for a in aggs):
         return _pit_window_aggregate_join(
             facts, features, entities, fact_ts, feature_ts, window_seconds, aggs, approx
         )
-
-    fact_cols = facts.columns
-    feat = features
-    for k in entities:
-        ltype = facts.schema[k].dataType
-        if feat.schema[k].dataType != ltype:
-            feat = feat.withColumn(k, F.col(k).cast(ltype))
-
-    # Materialize every agg's source expression on the feature side as
-    # __v_<aggname> (handles str, Expr and Column specs uniformly; for
-    # count-with-no-column, lit(1) marks "a feature row exists" so the
-    # windowed count never counts co-partitioned fact rows — their
-    # __v_ columns are NULL and Spark's count/sum/avg/min/max all skip
-    # NULLs).
-    feature_side = feat.select(
-        *entities,
-        F.col(feature_ts).alias("__t"),
-        F.lit(0).alias("__side"),
-        *[a._source().alias(f"__v_{a.name}") for a in aggs],
-        *[
-            F.lit(None).cast(facts.schema[c].dataType).alias(f"__f_{c}")
-            for c in fact_cols
-        ],
-    )
-    fact_side = facts.select(
-        *entities,
-        F.col(fact_ts).alias("__t"),
-        F.lit(1).alias("__side"),
-        *[
-            F.lit(None)
-            .cast(feature_side.schema[f"__v_{a.name}"].dataType)
-            .alias(f"__v_{a.name}")
-            for a in aggs
-        ],
-        *[F.col(c).alias(f"__f_{c}") for c in fact_cols],
-    )
-    unioned = feature_side.unionByName(fact_side)
-
-    # Single orderBy expression: Spark RANGE frames reject multi-column
-    # ordering. The frame includes every tie of the current micros
-    # value, which is exactly the `feature_ts <= fact_ts` bound — a
-    # feature row stamped at the fact's own timestamp is in-window.
-    # Materialized once so every agg shares ONE Window operator/sort.
-    unioned = unioned.withColumn("__ord", F.unix_micros(F.col("__t")))
-    base = W.partitionBy(*entities).orderBy(F.col("__ord"))
-    if window_seconds is None:
-        w = base.rangeBetween(W.unboundedPreceding, 0)
-    else:
-        w = base.rangeBetween(-int(window_seconds * 1_000_000), 0)
-
-    out = unioned
-    for a in aggs:
-        src = F.col(f"__v_{a.name}")
-        match a.kind:
-            case "sum":
-                out = out.withColumn(a.name, F.sum(src).over(w))
-            case "mean":
-                out = out.withColumn(a.name, F.avg(src).over(w))
-            case "min":
-                out = out.withColumn(a.name, F.min(src).over(w))
-            case "max":
-                out = out.withColumn(a.name, F.max(src).over(w))
-            case "count":
-                out = out.withColumn(a.name, F.count(src).over(w))
-    return out.filter(F.col("__side") == 1).select(
-        *[F.col(f"__f_{c}").alias(c) for c in fact_cols],
-        *[F.col(a.name) for a in aggs],
+    return pit_union_pass(
+        facts,
+        features,
+        entities,
+        fact_ts,
+        feature_ts,
+        payload_cols=[],
+        windowed=[(a, window_seconds) for a in aggs],
     )
 
 

@@ -14,7 +14,9 @@ Spark has no native as-of join, so two strategies are provided:
     ``last(struct, ignorenulls=True)`` over a rows-window. Cost is one
     shuffle + one sort, O(n log n), with NO join explosion no matter
     how many fact and feature rows share an entity — the classic
-    sorted-merge formulation of as-of.
+    sorted-merge formulation of as-of. :func:`pit_union_pass` builds
+    it once; trailing-window aggregates over the same union
+    (``pit_window_aggregate``) ride the same sort.
 
 ``strategy="join"``
     Left join on entities with the ``feature_ts <= fact_ts`` range
@@ -32,10 +34,14 @@ null).
 
 from __future__ import annotations
 
-from typing import Literal
+from dataclasses import replace
+from typing import TYPE_CHECKING, Literal, Sequence
 
 from pyspark.sql import Column, DataFrame, Window as W
 from pyspark.sql import functions as F
+
+if TYPE_CHECKING:
+    from aligned_spark.operators.aggregate import AggSpec
 
 _NUM_ORDER = ["tinyint", "smallint", "int", "bigint", "float", "double"]
 
@@ -281,6 +287,11 @@ def pit_join(
     (``local/job.py:576-581``). Without ``fact_ts`` (entity-only
     facts) or without ``feature_ts`` the semantics degrade to
     latest-row-per-entity / plain left join — same as the reference.
+
+    The default ``strategy="union"`` is :func:`pit_union_pass` with the
+    payload only: one shuffle, one sort, one Window.
+    ``ContractStore.features_for`` calls that pass directly, so a
+    view's windowed aggregates ride the same sort as its as-of columns.
     """
     feature_columns = feature_columns or [
         c for c in features.columns if c not in set(entities) | {feature_ts}
@@ -346,31 +357,43 @@ def _asof_propagate(
         return _asof_via_join(
             facts, features, by, fact_ts, feature_ts, payload_cols, ttl_seconds
         )
-    return _asof_via_union(
+    return pit_union_pass(
         facts, features, by, fact_ts, feature_ts, payload_cols, ttl_seconds,
         bucket_seconds=bucket_seconds,
         direction=direction,
     )
 
 
-def _asof_via_union(
+def pit_union_pass(
     facts: DataFrame,
     features: DataFrame,
     by: list[str],
     fact_ts: str,
     feature_ts: str,
     payload_cols: list[str],
-    ttl_seconds: float | None,
+    ttl_seconds: float | None = None,
+    windowed: Sequence[tuple[AggSpec, float | None]] = (),
     bucket_seconds: float | None = None,
     direction: str = "backward",
 ) -> DataFrame:
+    """The one entity-partitioned, time-ordered pass behind every
+    point-in-time column: the as-of payload (``pit_join``/``asof_join``)
+    and trailing-window aggregates (``pit_window_aggregate``) of the
+    same feature frame share ONE union, ONE shuffle on ``by`` and ONE
+    sort on ``(by, __ord, __side)``.
+
+    ``windowed``: ``(AggSpec, window_seconds)`` pairs of streamable
+    kinds (sum/mean/min/max/count), each evaluated over the RANGE frame
+    ``[fact_ts - window, fact_ts]`` (``None`` = unbounded). Frames order
+    by ``__ord`` alone, a prefix of the as-of sort, so they add one
+    Window per distinct frame and no Sort. ``ttl_seconds`` gates the
+    as-of payload only.
+
+    Output: every fact column (declared types kept), then
+    ``__p_<c>`` per payload column, then one column per windowed spec
+    named ``spec.name``."""
     fact_cols = facts.columns
 
-    # carry the feature row as one struct (row atomicity) incl. its ts
-    payload = F.struct(
-        F.col(feature_ts).alias("__ts"),
-        *[F.col(c).alias(c) for c in payload_cols],
-    )
     # coerce entity key types to a common WIDENED type so the union
     # lines up losslessly; fact output columns (__f_) keep originals
     fact_casts, feat = _widened_key_casts(facts, features, by)
@@ -379,28 +402,42 @@ def _asof_via_union(
         c = F.col(k)
         return c.cast(fact_casts[k]) if k in fact_casts else c
 
+    # carry the feature row as one struct (row atomicity) incl. its ts;
+    # each windowed spec's source is materialized as __v_<name> (for
+    # count-with-no-column, lit(1) marks "a feature row exists"), NULL
+    # on fact rows, which every streamable aggregate skips
+    values = {f"__v_{a.name}": a._source() for a, _ in windowed}
+    if payload_cols:
+        values[_PAYLOAD] = F.struct(
+            F.col(feature_ts).alias("__ts"),
+            *[F.col(c).alias(c) for c in payload_cols],
+        )
     feature_side = feat.select(
         *by,
         F.col(feature_ts).alias("__t"),
         F.lit(0).alias(_SIDE),
-        payload.alias(_PAYLOAD),
+        *[v.alias(name) for name, v in values.items()],
         *[F.lit(None).cast(facts.schema[c].dataType).alias(f"__f_{c}") for c in fact_cols],
     )
     fact_side = facts.select(
         *[fact_key(k).alias(k) for k in by],
         F.col(fact_ts).alias("__t"),
         F.lit(1).alias(_SIDE),
-        F.lit(None).cast(feature_side.schema[_PAYLOAD].dataType).alias(_PAYLOAD),
+        *[F.lit(None).cast(feature_side.schema[c].dataType).alias(c) for c in values],
         *[F.col(c).alias(f"__f_{c}") for c in fact_cols],
     )
-    unioned = feature_side.unionByName(fact_side)
+    # the order key is materialized once so the as-of ROWS window and
+    # every RANGE frame (which takes a single order expression) share
+    # the one sort
+    propagated = feature_side.unionByName(fact_side).withColumn(
+        "__ord", F.unix_micros(F.col("__t"))
+    )
 
     # nulls_first: NULL-ts feature rows become the "earliest" state, so
     # they match facts predating all timestamped rows and lose to any
     # later timestamped row — the reference's null-passes rule.
-    order = [F.col("__t").asc_nulls_first(), F.col(_SIDE).asc()]
-    propagated = unioned
-    if direction in ("backward", "nearest"):
+    order = [F.col("__ord").asc_nulls_first(), F.col(_SIDE).asc()]
+    if payload_cols and direction in ("backward", "nearest"):
         if bucket_seconds is None:
             w = (
                 W.partitionBy(*by)
@@ -414,7 +451,7 @@ def _asof_via_union(
             propagated = _bucketed_propagate(
                 propagated, by, order, int(bucket_seconds * 1_000_000)
             )
-    if direction in ("forward", "nearest"):
+    if payload_cols and direction in ("forward", "nearest"):
         # mirror scan: first feature at or after the fact. Ties put
         # the fact BEFORE same-ts features (side desc) so an
         # exactly-at-ts feature matches; NULL-ts features sort last —
@@ -436,6 +473,23 @@ def _asof_via_union(
                 propagated, by, int(bucket_seconds * 1_000_000)
             )
 
+    # The RANGE frame includes every tie of the current micros value,
+    # which is exactly the `feature_ts <= fact_ts` bound — a feature
+    # row stamped at the fact's own timestamp is in-window. Specs that
+    # share a frame share one Window operator.
+    base = W.partitionBy(*by).orderBy(F.col("__ord"))
+    for a, window_seconds in windowed:
+        lo = (
+            W.unboundedPreceding
+            if window_seconds is None
+            else -int(window_seconds * 1_000_000)
+        )
+        # the spec's own aggregate over its materialized source
+        agg = replace(a, column=f"__v_{a.name}").to_raw_agg()
+        propagated = propagated.withColumn(
+            a.name, agg.over(base.rangeBetween(lo, 0))
+        )
+
     out = propagated.filter(F.col(_SIDE) == 1)
 
     def ttl_gate(col: Column, forward: bool) -> Column:
@@ -450,7 +504,9 @@ def _asof_via_union(
         in_ttl = pts.isNull() | (diff <= int(ttl_seconds * 1_000_000))
         return F.when(in_ttl, col)
 
-    if direction == "backward":
+    if not payload_cols:
+        picked = None
+    elif direction == "backward":
         picked = ttl_gate(F.col("__picked"), forward=False)
     elif direction == "forward":
         picked = ttl_gate(F.col("__picked_fwd"), forward=True)
@@ -473,6 +529,7 @@ def _asof_via_union(
     return out.select(
         *[F.col(f"__f_{c}").alias(c) for c in fact_cols],
         *[picked.getField(c).alias(f"__p_{c}") for c in payload_cols],
+        *[F.col(a.name) for a, _ in windowed],
     )
 
 

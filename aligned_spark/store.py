@@ -31,8 +31,12 @@ from aligned_spark.contracts import (
     ModelContractWrapper,
 )
 from aligned_spark.operators import core as ops
-from aligned_spark.operators.aggregate import group_aggregate, pit_window_aggregate
-from aligned_spark.operators.joins import equi_join, pit_join
+from aligned_spark.operators.aggregate import (
+    STREAM_KINDS,
+    group_aggregate,
+    pit_window_aggregate,
+)
+from aligned_spark.operators.joins import equi_join, pit_join, pit_union_pass
 from aligned_spark.plans.view_query import FeatureViewQuery, compute_view
 from aligned_spark.requests import RetrievalRequest
 from aligned_spark.types import FeatureReference
@@ -201,9 +205,31 @@ class ContractStore:
             store=self,
         )
 
+        windowed = [a for a in aggs_wanted if a.window.window_seconds is not None]
+        unwindowed = [a for a in aggs_wanted if a.window.window_seconds is None]
+        if windowed and (feature_ts is None or fact_ts is None):
+            raise ValueError(
+                f"windowed aggregations on {view.name!r} need event "
+                "timestamps on both the view and the fact frame"
+            )
+        cols = [c for c in plain_wanted if c in feature_frame.columns]
+        streamed = [a for a in windowed if a.spec.kind in STREAM_KINDS]
+
         out = facts
-        if plain_wanted:
-            cols = [c for c in plain_wanted if c in feature_frame.columns]
+        if streamed:
+            # one union + entity shuffle + sort for the as-of columns
+            # and every streamable windowed aggregate, whatever its window
+            out = pit_union_pass(
+                out,
+                feature_frame,
+                entities,
+                fact_ts,
+                feature_ts,
+                payload_cols=cols,
+                ttl_seconds=ttl,
+                windowed=[(a.spec, a.window.window_seconds) for a in streamed],
+            ).withColumnsRenamed({f"__p_{c}": c for c in cols})
+        elif cols:
             out = pit_join(
                 out,
                 feature_frame,
@@ -214,24 +240,18 @@ class ContractStore:
                 feature_columns=cols,
             )
 
-        if aggs_wanted:
-            windowed = [a for a in aggs_wanted if a.window.window_seconds is not None]
-            unwindowed = [a for a in aggs_wanted if a.window.window_seconds is None]
-            if unwindowed:
-                agged = group_aggregate(
-                    feature_frame, entities, [a.spec for a in unwindowed]
-                )
-                out = equi_join(out, agged, entities, how="left")
-            if windowed:
-                if feature_ts is None or fact_ts is None:
-                    raise ValueError(
-                        f"windowed aggregations on {view.name!r} need event "
-                        "timestamps on both the view and the fact frame"
-                    )
-                by_window: dict[float, list] = {}
-                for a in windowed:
-                    by_window.setdefault(a.window.window_seconds, []).append(a)
-                for window_seconds, group in by_window.items():
+        if unwindowed:
+            agged = group_aggregate(
+                feature_frame, entities, [a.spec for a in unwindowed]
+            )
+            out = equi_join(out, agged, entities, how="left")
+        if windowed:
+            by_window: dict[float, list] = {}
+            for a in windowed:
+                by_window.setdefault(a.window.window_seconds, []).append(a.spec)
+            for window_seconds, group in by_window.items():
+                joined = [a for a in group if a.kind not in STREAM_KINDS]
+                if joined:
                     out = pit_window_aggregate(
                         out,
                         feature_frame,
@@ -239,8 +259,11 @@ class ContractStore:
                         fact_ts=fact_ts,
                         feature_ts=feature_ts,
                         window_seconds=window_seconds,
-                        aggs=[a.spec for a in group],
+                        aggs=joined,
                     )
+            # windowed columns last, grouped by window in request order
+            names = [a.name for group in by_window.values() for a in group]
+            out = out.select(*[c for c in out.columns if c not in names], *names)
 
         if derived_post:
             out = ops.derive(out, derived_post)

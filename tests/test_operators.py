@@ -135,6 +135,105 @@ def test_pit_golden(spark, pit_store):
     assert r3.personal_income == 9900
 
 
+@pytest.mark.parametrize("ttl", [None, 86400])
+def test_features_for_one_pass_matches_two_pass(spark, ttl):
+    """``features_for`` computes a view's as-of columns and windowed
+    aggregates in one union pass; it must give the rows and column order
+    of the two-pass composition (``pit_join``, the unwindowed equi join,
+    then ``pit_window_aggregate`` per window). Covers NULL-ts feature
+    rows, a feature stamped exactly at the fact, facts before an
+    entity's first event, duplicate facts, a TTL (gating the as-of
+    columns only), an unwindowed and a join-only (median) aggregate."""
+    from collections import Counter
+
+    from aligned_spark.operators.aggregate import (
+        group_aggregate,
+        pit_window_aggregate,
+    )
+    from aligned_spark.operators.joins import equi_join, pit_join
+
+    t0 = dt.datetime(2024, 1, 10)
+    day = dt.timedelta(days=1)
+    feats = spark.createDataFrame(
+        [
+            (1, None, 100.0, "n"),
+            (1, t0 - 3 * day, 1.0, "a"),
+            (1, t0 - day / 2, 2.0, "b"),
+            (1, t0, 4.0, "c"),
+            (1, t0 + 2 * day, 8.0, "d"),
+            (2, t0 + 5 * day, 16.0, "e"),
+            (3, None, 32.0, "z"),
+        ],
+        "user_id long, ts timestamp, value double, kind string",
+    )
+    facts = spark.createDataFrame(
+        [
+            (1, 1, t0),
+            (2, 1, t0 - day),
+            (3, 1, t0 + 3 * day),
+            (4, 1, t0 + 10 * day),
+            (5, 1, t0 - 5 * day),
+            (6, 2, t0),
+            (6, 2, t0),
+            (7, 3, t0),
+            (8, 4, t0),
+        ],
+        "fact_id int, user_id long, event_timestamp timestamp",
+    )
+
+    @feature_view(name="ev", source=InMemorySource(feats))
+    class Ev:
+        user_id = Int64().as_entity()
+        ts = EventTimestamp(ttl_seconds=ttl)
+        value = Float64()
+        kind = String()
+
+        cnt_7d = value.aggregate().count().over(days=7)
+        sum_1d = value.aggregate().sum().over(days=1)
+        mean_7d = value.aggregate().mean().over(days=7)
+        med_7d = value.aggregate().median().over(days=7)
+        total = value.aggregate().sum()
+
+    store = ContractStore(spark)
+    store.add_view(Ev)
+    spec = {a.name: a.spec for a in store.views["ev"].aggregations}
+    out = store.features_for(
+        facts,
+        ["ev:value", "ev:kind", "ev:sum_1d", "ev:cnt_7d", "ev:mean_7d",
+         "ev:med_7d", "ev:total"],
+    )
+
+    # the as-of columns keep the store's own order among themselves
+    plain = [c for c in out.columns if c in ("value", "kind")]
+    two = pit_join(
+        facts, feats, ["user_id"], "ts", "event_timestamp",
+        ttl_seconds=ttl, feature_columns=plain,
+    )
+    two = equi_join(
+        two, group_aggregate(feats, ["user_id"], [spec["total"]]),
+        ["user_id"], how="left",
+    )
+    for window, names in ((7 * 86400, ["cnt_7d", "mean_7d", "med_7d"]),
+                          (86400, ["sum_1d"])):
+        two = pit_window_aggregate(
+            two, feats, ["user_id"], "event_timestamp", "ts", window,
+            [spec[n] for n in names],
+        )
+
+    assert out.columns == two.columns
+    got = Counter(map(tuple, out.collect()))
+    assert got == Counter(map(tuple, two.collect()))
+    rows = {r.fact_id: r for r in out.collect()}
+    assert (rows[1].kind, rows[1].sum_1d, rows[1].cnt_7d) == ("c", 6.0, 3)
+    assert (rows[5].value, rows[5].cnt_7d) == (100.0, 0)
+    assert (rows[6].value, rows[6].sum_1d, rows[6].cnt_7d) == (None, None, 0)
+    assert (rows[7].value, rows[7].total) == (32.0, 32.0)
+    # fact 4: the last event is 8 days back — outside the 7-day window
+    # always, outside the TTL only when one is declared
+    assert rows[4].cnt_7d == 0
+    assert rows[4].kind == (None if ttl else "d")
+
+
 def test_multi_expansion(spark):
     df = spark.createDataFrame([(1, 2.0), (2, 3.0)], "id int, v double")
     multi = E.Multi(
@@ -699,6 +798,48 @@ def test_asof_pit_key_widening(spark, strategy):
     vals = {r.k: r.v for r in res.collect()}
     assert vals == {16777216: 1.0, 16777217: None}
     assert res.schema["k"].dataType.simpleString() == "bigint"
+
+
+def test_pit_window_aggregate_key_widening(spark):
+    """The windowed PIT union used to cast the FEATURE key down to the
+    fact key's type: with ANSI off a bigint 2**32+1 wrapped onto int 1,
+    and a bigint 16777217 collapsed onto float 16777216, so foreign
+    rows were summed into the fact. Keys must widen, as in pit_join;
+    fact output columns keep their declared types."""
+    from aligned_spark.operators.aggregate import AggSpec, pit_window_aggregate
+
+    t0 = dt.datetime(2024, 1, 10)
+    aggs = [AggSpec("s", "sum", "v"), AggSpec("n", "count")]
+
+    def run(facts, feats):
+        out = pit_window_aggregate(
+            facts, feats, ["k"], "ts", "fts", 86400, aggs
+        )
+        return out, {r.k: (r.s, r.n) for r in out.collect()}
+
+    facts = spark.createDataFrame([(1, t0), (2, t0)], "k int, ts timestamp")
+    feats = spark.createDataFrame(
+        [
+            (2**32 + 1, t0 - dt.timedelta(hours=1), 5.0),
+            (2, t0 - dt.timedelta(hours=1), 7.0),
+        ],
+        "k bigint, fts timestamp, v double",
+    )
+    out, got = run(facts, feats)
+    assert got == {1: (None, 0), 2: (7.0, 1)}
+    assert out.schema["k"].dataType.simpleString() == "int"
+
+    ffacts = spark.createDataFrame([(16777216.0, t0)], "k float, ts timestamp")
+    ffeats = spark.createDataFrame(
+        [
+            (16777216, t0 - dt.timedelta(hours=1), 1.0),
+            (16777217, t0 - dt.timedelta(hours=1), 2.0),
+        ],
+        "k bigint, fts timestamp, v double",
+    )
+    out, got = run(ffacts, ffeats)
+    assert got == {16777216.0: (1.0, 1)}
+    assert out.schema["k"].dataType.simpleString() == "float"
 
 
 def test_asof_bucketed_matches_plain(spark):

@@ -198,6 +198,62 @@ def test_pit_window_agg_one_shuffle_no_join(spark, lineitem):
     assert plan.count("Window") == 1, plan
 
 
+def test_features_for_one_pass_per_view(spark, lineitem):
+    """A view's as-of columns and its windowed aggregates of any window
+    lengths come from one union: one exchange on the entity key, one
+    sort, no join. The RANGE frames order by a prefix of the as-of
+    sort, so they add Window operators but no Sort."""
+    from aligned_spark.contracts import (
+        EventTimestamp,
+        Float64,
+        Int64,
+        String,
+        feature_view,
+    )
+    from aligned_spark.sources.in_memory import InMemorySource
+    from aligned_spark.store import ContractStore
+
+    @feature_view(
+        name="li",
+        source=InMemorySource(
+            lineitem.select(
+                "l_suppkey", "ts", "l_quantity", "l_returnflag"
+            )
+        ),
+    )
+    class Li:
+        l_suppkey = Int64().as_entity()
+        ts = EventTimestamp()
+        l_quantity = Float64()
+        l_returnflag = String()
+
+        q_sum_1d = l_quantity.aggregate().sum().over(days=1)
+        q_cnt_7d = l_quantity.aggregate().count().over(days=7)
+        q_max_7d = l_quantity.aggregate().max().over(days=7)
+
+    store = ContractStore(spark)
+    store.add_view(Li)
+    facts = spark.createDataFrame(
+        [(1, "2024-01-01 00:30:00"), (3, "2024-01-01 00:40:00")],
+        "l_suppkey long, event_timestamp string",
+    ).select("l_suppkey", F.col("event_timestamp").cast("timestamp"))
+    out = store.features_for(
+        facts,
+        [
+            "li:l_quantity",
+            "li:l_returnflag",
+            "li:q_sum_1d",
+            "li:q_cnt_7d",
+            "li:q_max_7d",
+        ],
+    )
+    plan = plan_text(out, "simple")
+    assert "Join" not in plan, plan
+    assert plan.count("Exchange ") == 1, plan
+    assert plan.count("Sort [") == 1, plan
+    assert out.count() == 2
+
+
 def test_bucketed_asof_partitions_by_bucket(spark):
     """The segmented-scan as-of must shuffle on (entity, __bucket) —
     the skew fix is visible as the bucket column in the exchange."""
