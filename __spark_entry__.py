@@ -9791,7 +9791,21 @@ def _model_ece(spark, sf_dir):
 # fixed), and the queries added this round. Union(r2 green, r3 window)
 # = every full-oracle query in the file.
 _PRIORITY: list[str] = [
-    # Slots 1-10 = the registered point-in-time queries: the store
+    # Slots 1-11 = the change-feed queries whose rewrite commits are
+    # diffed in one shuffle (one full-outer join when keyed, one
+    # aggregate when keyless), and the IVM refreshes that read them.
+    "source_delta_cdf",
+    "source_iceberg_cdf",
+    "source_delta_cdf_changefiles",
+    "source_iceberg_cdf_changefiles",
+    "source_delta_cdf_replace",
+    "stream_table_cdf",
+    "stream_table_cdf_iceberg",
+    "store_incremental_aggregate",
+    "store_incremental_aggregate_minmax",
+    "store_incremental_aggregate_distinct",
+    "store_incremental_aggregate_hll",
+    # Slots 12-21 = the registered point-in-time queries: the store
     # path, whose as-of columns and windowed aggregates share one
     # union pass per view, and every as-of direction of that pass.
     "store_features_for",
@@ -9804,7 +9818,7 @@ _PRIORITY: list[str] = [
     "join_asof_forward",
     "join_asof_nearest",
     "join_asof_bucketed_nearest",
-    # Slots 11-20 = the oracle-checked dedup, decontamination and
+    # Slots 22-31 = the oracle-checked dedup, decontamination and
     # prefix-Jaccard queries, whose operators take their hashes from
     # one HashFamily object per family.
     "dedup_minhash",
@@ -9817,7 +9831,7 @@ _PRIORITY: list[str] = [
     "text_decontaminate_fuzzy",
     "text_decontaminate_bloom",
     "sim_prefix_jaccard_pairs",
-    # Slots 21-26 = the four TPC-H queries that missed the previous
+    # Slots 32-37 = the four TPC-H queries that missed an earlier
     # window, and the two IVM queries whose regressions (_rolling
     # 0.90x, _windowed 0.74x) are still unclassified.
     "tpch_q11",
@@ -9826,21 +9840,10 @@ _PRIORITY: list[str] = [
     "tpch_q16",
     "store_incremental_aggregate_rolling",
     "store_incremental_aggregate_windowed",
-    # Slots 27-50 = the previous window's head: the IVM, change-feed,
-    # MERGE and table-stream queries the shared table-log core
-    # serves, then the oldest-verified rest.
-    "store_incremental_aggregate",
-    "store_incremental_aggregate_minmax",
-    "store_incremental_aggregate_distinct",
-    "store_incremental_aggregate_hll",
-    "source_delta_cdf",
-    "source_iceberg_cdf",
-    "source_delta_cdf_changefiles",
-    "source_iceberg_cdf_changefiles",
+    # Slots 38-50 = the MERGE and table-stream queries the shared
+    # table-log core serves, then the oldest-verified rest.
     "source_delta_merge",
     "source_iceberg_merge",
-    "stream_table_cdf",
-    "stream_table_cdf_iceberg",
     "stream_table_source",
     "stream_table_source_iceberg",
     "join_interval_overlap",
@@ -9852,7 +9855,6 @@ _PRIORITY: list[str] = [
     "corpus_weighted_reservoir",
     "embed_prototypicality",
     "events_anomaly_mad",
-    "events_cohort_retention",
 ]
 
 

@@ -29,7 +29,7 @@ from pyspark.sql import Column, DataFrame, Window as W
 from pyspark.sql import functions as F
 
 from aligned_spark.expr import Expr
-from aligned_spark.operators.joins import pit_union_pass
+from aligned_spark.operators.joins import _widened_key_casts, pit_union_pass
 
 AggKind = Literal[
     "sum",
@@ -543,7 +543,9 @@ def _pit_window_aggregate_join(
 ) -> DataFrame:
     """Join formulation: join features in-window per fact row, then
     groupBy row_id — exact for every agg kind, candidate-set bounded
-    by the window length."""
+    by the window length. Keys compare at their widened common type,
+    as on the as-of and streamed paths."""
+    fact_casts, features = _widened_key_casts(facts, features, entities)
     fact_cols = facts.columns
     f = facts.select(
         F.monotonically_increasing_id().alias("__row_id"),
@@ -560,7 +562,10 @@ def _pit_window_aggregate_join(
     )
     cond = None
     for k in entities:
-        c = F.col(f"__f_{k}") == F.col(f"__k_{k}")
+        fk = F.col(f"__f_{k}")
+        if k in fact_casts:
+            fk = fk.cast(fact_casts[k])
+        c = fk == F.col(f"__k_{k}")
         cond = c if cond is None else cond & c
     ts_ok = F.col("__feat_ts") <= F.col(f"__f_{fact_ts}")
     if window_seconds is not None:

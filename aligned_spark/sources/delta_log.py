@@ -914,17 +914,21 @@ class DeltaLog(TableLog):
         :meth:`read_changes` (the cheap append feed), a copy-on-write
         rewrite does NOT re-emit its surviving rows: per rewrite
         commit the removed parts' old content is diffed against the
-        added parts' new content — keyed (full-outer join on the
-        ``mergeKeys`` the MERGE recorded) when available, else a
-        whole-row ``exceptAll`` (updates then appear as
-        delete+insert, still exactly-once).
+        added parts' new content in one shuffle — keyed (ONE
+        full-outer join on the ``mergeKeys`` the MERGE recorded, every
+        change row emitted from it by one generator) when available,
+        else ONE whole-row signed-count aggregate with
+        ``exceptAll``'s multiset semantics (updates then appear as
+        delete+insert, still exactly-once); see
+        :func:`~aligned_spark.sources.cdc.diff_rewrite`.
 
-        Scale: cost per rewrite commit is a join over ONLY its
-        touched parts (the 1-row-MERGE-into-100 TB case reads the
-        handful of rewritten files twice), append commits stay a pure
-        scan of new parts — the same contour delta-spark's CDF-less
-        reconstruction pays. Matches public Delta CDF column
-        semantics (`_change_type`, `_commit_version`)."""
+        Scale: cost per rewrite commit is one join (or aggregate)
+        over ONLY its touched parts (the 1-row-MERGE-into-100 TB
+        case reads the handful of rewritten files twice), append
+        commits stay a pure scan of new parts — the same contour
+        delta-spark's CDF-less reconstruction pays. Matches public
+        Delta CDF column semantics (`_change_type`,
+        `_commit_version`)."""
         latest = self.latest_version()
         to = latest if to_version is None else to_version
         if from_version > to:
@@ -1049,22 +1053,24 @@ class DeltaLog(TableLog):
                     if new_files
                     else spark.createDataFrame([], schema)
                 )
-                pieces += diff_rewrite(
-                    old, new, cols, keys, "_commit_version", v
+                pieces.append(
+                    diff_rewrite(old, new, cols, keys, "_commit_version", v)
                 )
                 prev = cur
                 continue
-            pieces += self._commit_changes(
-                spark,
-                prev,
-                cur,
-                adds,
-                removes,
-                del_adds,
-                cols,
-                keys,
-                "_commit_version",
-                v,
+            pieces.append(
+                self._commit_changes(
+                    spark,
+                    prev,
+                    cur,
+                    adds,
+                    removes,
+                    del_adds,
+                    cols,
+                    keys,
+                    "_commit_version",
+                    v,
+                )
             )
             prev = cur
         if not pieces:

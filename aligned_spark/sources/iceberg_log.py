@@ -1236,7 +1236,8 @@ class IcebergLog(TableLog):
         keyed on the ``merge-keys`` the MERGE snapshot summary
         recorded, else whole-row (shared machinery:
         :mod:`aligned_spark.sources.cdc`). Cost per rewrite snapshot
-        is a join over only its touched parts.
+        is one shuffle over only its touched parts: one full-outer
+        join when keyed, one aggregate when whole-row.
 
         Bounds accept either domain: a snapshot id, or its monotone
         SEQUENCE NUMBER (:meth:`sequence_numbers` — what the IVM
@@ -1301,17 +1302,19 @@ class IcebergLog(TableLog):
                 continue
             mk = snap.get("summary", {}).get("merge-keys")
             keys = mk.split(",") if mk else None
-            pieces += self._commit_changes(
-                spark,
-                old_view,
-                cur_view,
-                added,
-                removed,
-                new_del,
-                cols,
-                keys,
-                "_snapshot_id",
-                sid,
+            pieces.append(
+                self._commit_changes(
+                    spark,
+                    old_view,
+                    cur_view,
+                    added,
+                    removed,
+                    new_del,
+                    cols,
+                    keys,
+                    "_snapshot_id",
+                    sid,
+                )
             )
         if not pieces:
             return tag_changes(

@@ -10,6 +10,7 @@ metadata commit lands — which is what makes the whole write atomic.
 
 from __future__ import annotations
 
+import logging
 import os
 import shutil
 import uuid
@@ -17,8 +18,12 @@ from dataclasses import dataclass
 from typing import Any
 from urllib.parse import unquote, urlparse
 
+from py4j.protocol import Py4JError
+from pyspark.errors.exceptions.captured import CapturedException
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+_log = logging.getLogger(__name__)
 
 _HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
 #: string stats longer than this are not recorded — a TRUNCATED max
@@ -138,18 +143,22 @@ def _has_root_repartition(df: DataFrame) -> bool:
 
 
 def _has_generate(df: DataFrame) -> bool:
-    """Whether the analyzed plan contains a Generate (explode/
-    posexplode/inline) node. Generate passes its CHILD's size
-    estimate through, so it is the one common operator that can
-    UNDER-estimate output bytes — size-targeting bails out rather
-    than over-coalesce a genuinely large exploded write. Probed via
-    Catalyst's tree-pattern bitset — O(1) per call (a py4j node walk
-    measured ~15 ms on a modest plan; merge staging plans are far
-    bigger and stage several writes per query)."""
+    """Whether the analyzed plan, with cached sub-plans substituted,
+    contains a Generate (explode/posexplode/inline) node. Generate
+    passes its CHILD's size estimate through, so it is the one common
+    operator that can UNDER-estimate output bytes — size-targeting
+    bails out rather than over-coalesce a genuinely large exploded
+    write. A Generate inside a cached relation does not count: the
+    relation's estimate is its materialized size (the IVM refresh
+    stages its aggregate MERGE from a persisted frame whose lineage
+    holds the change feed's diff generator). Probed via Catalyst's
+    tree-pattern bitset — O(1) per call (a py4j node walk measured
+    ~15 ms on a modest plan; merge staging plans are far bigger and
+    stage several writes per query)."""
     jvm = df.sparkSession._jvm
     pat = jvm.org.apache.spark.sql.catalyst.trees.TreePattern.GENERATE()
     return bool(
-        df._jdf.queryExecution().analyzed().containsPattern(pat)
+        df._jdf.queryExecution().withCachedData().containsPattern(pat)
     )
 
 
@@ -170,7 +179,9 @@ def _size_targeted(df: DataFrame) -> DataFrame:
     everything else mis-estimates toward MORE files than optimal,
     never a parallelism collapse. ``coalesce`` above a shuffle keeps
     the map side's parallelism; narrow lineages are bounded by
-    ~target bytes of input per task.
+    ~target bytes of input per task. A JVM error while probing the
+    plan (py4j, or the JVM exception PySpark re-raises) stages the
+    frame unsized and logs why.
     """
     try:
         spark = df.sparkSession
@@ -194,8 +205,10 @@ def _size_targeted(df: DataFrame) -> DataFrame:
         n = max(1, -(-est // target))
         if n < spark.sparkContext.defaultParallelism:
             return df.coalesce(n)
-    except Exception:
-        pass
+    except (Py4JError, CapturedException) as e:
+        _log.warning(
+            "size-targeting skipped, staging the write unsized: %s", e
+        )
     return df
 
 

@@ -168,8 +168,8 @@ class TableLog:
     def _recorded_keys(self, snap: Any) -> list[str] | None:
         """Merge keys the table recorded at its last MERGE, for a
         keyless rewrite commit (DELETE/replaceWhere): the keyed
-        full-outer diff is ~2x cheaper than the whole-row
-        ``exceptAll`` fallback and emits true update pairs. Only
+        full-outer diff emits true update pairs where the whole-row
+        aggregate fallback emits delete+insert. Only
         tables that have MERGEd (key discipline established) qualify;
         genuinely keyless tables still fall back."""
         mk = self._props_of(snap).get(self._MERGE_KEYS_PROP)
@@ -698,7 +698,7 @@ class TableLog:
         new_side = self._scan(
             spark, replace(snap, delete_files={}), list(staged)
         ).select(*cols)
-        pieces = diff_rewrite(
+        changes = diff_rewrite(
             self._scan(spark, snap, touched).select(*cols),
             new_side,
             cols,
@@ -706,10 +706,11 @@ class TableLog:
             "_commit_version",
             0,
         )
-        changes = pieces[0]
-        for piece in pieces[1:]:
-            changes = changes.unionByName(piece)
-        return self._stage_change_data(changes, cols)
+        # the diff's generator hides the output size from the staging
+        # size estimate, so spread the change files over the touched
+        # parts explicitly (per-part parallelism for CDF readers)
+        n = min(len(touched), spark.sparkContext.defaultParallelism)
+        return self._stage_change_data(changes.repartition(n), cols)
 
     # ------------------------------------------------- change feeds
 
@@ -776,32 +777,31 @@ class TableLog:
         keys: list[str] | None,
         version_col: str,
         version: int,
-    ) -> list[DataFrame]:
+    ) -> DataFrame:
         """Row-level changes of one commit with no change files,
         from the parts it added and removed and the position-delete
         files it added, each side scanned at ITS snapshot with its
         position deletes applied — so the cost is a scan of the
-        touched parts, never the table. Updates pair up by ``keys``
-        when the commit recorded them (:func:`~aligned_spark.sources.
-        cdc.diff_rewrite`)."""
+        touched parts, never the table. A rewrite is diffed in one
+        shuffle (:func:`~aligned_spark.sources.cdc.diff_rewrite`):
+        one full-outer join on ``keys`` when the commit recorded
+        them, so updates pair up, else one whole-row aggregate."""
         from aligned_spark.sources.cdc import diff_rewrite, tag_changes
 
         if new_deletes:  # merge-on-read: the pairs' rows (+ appends)
             old = self._deleted_rows(spark, prev, new_deletes, cols)
         elif not removed:  # pure append — no old content to diff
-            return [
-                tag_changes(
-                    self._scan(spark, cur, added),
-                    cols,
-                    "insert",
-                    version_col,
-                    version,
-                )
-            ]
+            return tag_changes(
+                self._scan(spark, cur, added),
+                cols,
+                "insert",
+                version_col,
+                version,
+            )
         else:  # copy-on-write rewrite of the removed parts
             old = self._scan(spark, prev, removed)
         if not added:  # every old row deleted
-            return [tag_changes(old, cols, "delete", version_col, version)]
+            return tag_changes(old, cols, "delete", version_col, version)
         return diff_rewrite(
             old,
             self._scan(spark, cur, added),

@@ -133,26 +133,27 @@ class ContractStore:
         if event_timestamp_column is None and "event_timestamp" in facts.columns:
             event_timestamp_column = "event_timestamp"
 
-        # parse + group refs per view
-        per_view: dict[str, set[str]] = {}
+        # parse + group refs per view, in request order ("view:*" in
+        # all_feature_names() order); a dict keeps the first mention
+        per_view: dict[str, dict[str, None]] = {}
         for ref_str in features:
             ref = FeatureReference.parse(ref_str)
             view = self.views.get(ref.location.name)
             if view is None:
                 raise KeyError(f"unknown view {ref.location.name!r}")
-            if ref.name == "*":
-                per_view.setdefault(view.name, set()).update(
-                    view.all_feature_names()
-                )
-            else:
-                per_view.setdefault(view.name, set()).add(ref.name)
+            names = (
+                view.all_feature_names() if ref.name == "*" else [ref.name]
+            )
+            per_view.setdefault(view.name, {}).update(
+                dict.fromkeys(names)
+            )
 
         out = facts
         for view_name, wanted in per_view.items():
             view = self.views[view_name]
             # prune: requested columns already present on the fact frame
             # (`feature_store.py:703-728`)
-            missing = {n for n in wanted if n not in out.columns}
+            missing = [n for n in wanted if n not in out.columns]
             if not missing:
                 continue
             out = self._join_view_features(out, view, missing, event_timestamp_column)
@@ -162,10 +163,10 @@ class ContractStore:
         self,
         facts: DataFrame,
         view: CompiledFeatureView,
-        wanted: set[str],
+        wanted: list[str],
         fact_ts: str | None,
     ) -> DataFrame:
-        request = RetrievalRequest.from_view(view).with_features(wanted)
+        request = RetrievalRequest.from_view(view).with_features(set(wanted))
         entities = view.entities
         feature_ts = view.event_timestamp.name if view.event_timestamp else None
         ttl = view.event_timestamp.ttl_seconds if view.event_timestamp else None
@@ -180,18 +181,19 @@ class ContractStore:
         }
         derived_pre = {n: e for n, e in derived.items() if n not in derived_post}
 
-        plain_wanted = {
+        # request order: the as-of columns come out in this order
+        plain_wanted = [
             n
             for n in wanted
             if n not in agg_names and n not in derived_post
-        }
+        ]
 
         # the scanned + pre-derived feature frame (no aggregation yet)
         feature_frame = compute_view(
             view,
             self.spark,
             features=(
-                plain_wanted
+                set(plain_wanted)
                 | set(derived_pre)
                 | {
                     r

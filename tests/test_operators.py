@@ -295,6 +295,34 @@ def test_load_feature_list_key(spark):
     assert rows[2] == [20.0, None]  # missing key → null slot
 
 
+@pytest.mark.parametrize(
+    "names",
+    [
+        ["credit_card_due", "student_loan_due", "due_sum", "bankruptcies"],
+        ["bankruptcies", "due_sum", "student_loan_due", "credit_card_due"],
+        ["student_loan_due", "bankruptcies", "credit_card_due", "due_sum"],
+        ["due_sum", "credit_card_due", "bankruptcies", "student_loan_due"],
+    ],
+)
+def test_features_for_columns_follow_request_order(spark, pit_store, names):
+    """The as-of columns come out in request order, and ``view:*`` in
+    ``all_feature_names()`` order — never in set-iteration order,
+    which changes between processes."""
+    facts = spark.createDataFrame(
+        [("19530219_5179", T1)],
+        "dob_ssn string, event_timestamp timestamp",
+    )
+    out = pit_store.features_for(
+        facts, [f"credit_history:{n}" for n in names]
+    )
+    assert out.columns == ["dob_ssn", "event_timestamp", *names]
+    star = pit_store.features_for(facts, ["credit_history:*"])
+    every = pit_store.views["credit_history"].all_feature_names()
+    assert star.columns == facts.columns + [
+        n for n in every if n not in facts.columns
+    ]
+
+
 def test_load_feature_in_view(spark, pit_store):
     """A view declaring a cross-contract feature resolves it through
     the store."""
@@ -798,6 +826,40 @@ def test_asof_pit_key_widening(spark, strategy):
     vals = {r.k: r.v for r in res.collect()}
     assert vals == {16777216: 1.0, 16777217: None}
     assert res.schema["k"].dataType.simpleString() == "bigint"
+
+
+def test_pit_window_join_path_key_widening(spark):
+    """The windowed join formulation (median is not streamable) must
+    compare a float fact key with bigint feature keys in double, as
+    the as-of and streamed paths do: fact key 16777216.0 matches
+    feature key 16777216 only, never 16777217."""
+    import datetime as dt
+
+    from aligned_spark.operators.aggregate import (
+        AggSpec,
+        pit_window_aggregate,
+    )
+
+    t0 = dt.datetime(2024, 1, 10)
+    facts = spark.createDataFrame([(16777216.0, t0)], "k float, ts timestamp")
+    feats = spark.createDataFrame(
+        [
+            (16777216, t0 - dt.timedelta(hours=1), 1.0),
+            (16777217, t0 - dt.timedelta(hours=1), 2.0),
+        ],
+        "k bigint, fts timestamp, v double",
+    )
+    out = pit_window_aggregate(
+        facts,
+        feats,
+        entities=["k"],
+        fact_ts="ts",
+        feature_ts="fts",
+        window_seconds=86400,
+        aggs=[AggSpec("v_med", "median", "v"), AggSpec("v_cnt", "count")],
+    ).collect()
+    assert [(r.v_med, r.v_cnt) for r in out] == [(1.0, 1)]
+    assert out[0].k == 16777216.0
 
 
 def test_pit_window_aggregate_key_widening(spark):

@@ -1003,3 +1003,79 @@ def test_iceberg_ivm_seq_map_join_broadcasts(spark, tmp_path_factory):
     assert "ShuffledHashJoin" not in plan, plan
     # the version column materialized
     assert "_commit_version" in mapped.columns
+
+
+def _cdf_over_one_commit(spark, root, fmt, write):
+    """A 4-part table in ``fmt``, one ``write(log)`` commit, and the
+    change feed over exactly that commit."""
+    from aligned_spark.sources.delta_log import DeltaLog
+    from aligned_spark.sources.iceberg_log import IcebergLog
+
+    log = (DeltaLog if fmt == "delta" else IcebergLog)(str(root / fmt))
+    log.write(
+        spark.range(0, 400)
+        .selectExpr("id as k", "id * 2 as v")
+        .repartitionByRange(4, "k")
+    )
+    if fmt == "delta":
+        v0 = log.latest_version()
+        write(log)
+        return log.read_cdf(spark, v0)
+    v0 = log.snapshot_ids()[-1]
+    write(log)
+    return log.read_changes(spark, v0)
+
+
+@pytest.mark.parametrize("fmt", ["delta", "iceberg"])
+def test_cdf_keyed_merge_diff_is_one_join_one_generate(
+    spark, tmp_path_factory, fmt
+):
+    """A keyed MERGE commit's change feed is ONE full-outer join on the
+    merge keys feeding ONE generator that emits every pre-image,
+    post-image, delete and insert — not four filtered copies of the
+    join."""
+    cdf = _cdf_over_one_commit(
+        spark,
+        tmp_path_factory.mktemp("cdfjoin"),
+        fmt,
+        lambda log: log.merge_upsert(
+            spark.createDataFrame(
+                [(3, -3), (1000, 1)], "k long, v long"
+            ),
+            ["k"],
+        ),
+    )
+    plan = cdf._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("Join ") == 1, plan
+    assert "Join FullOuter" in plan, plan
+    assert plan.count("Generate ") == 1, plan
+    assert sorted(r._change_type for r in cdf.collect()) == [
+        "insert",
+        "update_postimage",
+        "update_preimage",
+    ]
+
+
+@pytest.mark.parametrize("fmt", ["delta", "iceberg"])
+def test_cdf_keyless_delete_diff_is_one_aggregate(
+    spark, tmp_path_factory, fmt
+):
+    """A DELETE on a never-merged table has no recorded keys: its
+    change feed is ONE signed-count aggregate over every column (one
+    shuffle), with no ``Except`` in the plan."""
+    cdf = _cdf_over_one_commit(
+        spark,
+        tmp_path_factory.mktemp("cdfagg"),
+        fmt,
+        lambda log: log.delete_where(spark, F.col("k") == 7),
+    )
+    qe = cdf._jdf.queryExecution()
+    assert "Except" not in qe.analyzed().toString()
+    optimized = qe.optimizedPlan().toString()
+    assert optimized.count("Aggregate [") == 1, optimized
+    assert "Join" not in optimized, optimized
+    physical = plan_text(cdf, "simple")
+    assert physical.count("Exchange hashpartitioning") == 1, physical
+    assert [(r.k, r._change_type) for r in cdf.collect()] == [
+        (7, "delete")
+    ]
