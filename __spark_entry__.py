@@ -2234,8 +2234,9 @@ def _corpus_filter(spark, sf_dir):
 
     Uses the bit-parity Arrow scoring kernel: the codegen chains are
     re-inlined into the pushed-down Filter (one full HOF re-eval per
-    referenced column — measured 4.5 s warm at sf0.1 vs 0.3 s here);
-    the Python stage is a pushdown barrier, so scores compute once."""
+    referenced column — measured 4.5 s warm at sf0.1 vs 0.3 s here).
+    The kernel is built nondeterministic (``arrow_udf.kernel_udf``), so
+    the filter is not pushed below it and scores compute once."""
     from aligned_spark.functions.text_arrow import corpus_scores_arrow
 
     d = _t(spark, sf_dir, "documents")
@@ -9791,7 +9792,25 @@ def _model_ece(spark, sf_dir):
 # fixed), and the queries added this round. Union(r2 green, r3 window)
 # = every full-oracle query in the file.
 _PRIORITY: list[str] = [
-    # Slots 1-11 = the change-feed queries whose rewrite commits are
+    # Slots 1-12 = every oracle-checked query whose operator runs a
+    # package Arrow kernel that a pushed-down filter used to evaluate
+    # twice: the dedup, decontamination and prefix-Jaccard queries,
+    # whose operators take their hashes from one HashFamily object per
+    # family, and the two LSH pair joins that verify with the Arrow
+    # cosine.
+    "dedup_minhash",
+    "dedup_fingerprint",
+    "dedup_substring_spans",
+    "dedup_simhash_pairs",
+    "dedup_remove_spans",
+    "dedup_incremental",
+    "text_decontaminate",
+    "text_decontaminate_fuzzy",
+    "text_decontaminate_bloom",
+    "sim_prefix_jaccard_pairs",
+    "sim_lsh_pairs",
+    "vector_index_lsh",
+    # Slots 13-23 = the change-feed queries whose rewrite commits are
     # diffed in one shuffle (one full-outer join when keyed, one
     # aggregate when keyless), and the IVM refreshes that read them.
     "source_delta_cdf",
@@ -9805,7 +9824,7 @@ _PRIORITY: list[str] = [
     "store_incremental_aggregate_minmax",
     "store_incremental_aggregate_distinct",
     "store_incremental_aggregate_hll",
-    # Slots 12-21 = the registered point-in-time queries: the store
+    # Slots 24-33 = the registered point-in-time queries: the store
     # path, whose as-of columns and windowed aggregates share one
     # union pass per view, and every as-of direction of that pass.
     "store_features_for",
@@ -9818,20 +9837,7 @@ _PRIORITY: list[str] = [
     "join_asof_forward",
     "join_asof_nearest",
     "join_asof_bucketed_nearest",
-    # Slots 22-31 = the oracle-checked dedup, decontamination and
-    # prefix-Jaccard queries, whose operators take their hashes from
-    # one HashFamily object per family.
-    "dedup_minhash",
-    "dedup_fingerprint",
-    "dedup_substring_spans",
-    "dedup_simhash_pairs",
-    "dedup_remove_spans",
-    "dedup_incremental",
-    "text_decontaminate",
-    "text_decontaminate_fuzzy",
-    "text_decontaminate_bloom",
-    "sim_prefix_jaccard_pairs",
-    # Slots 32-37 = the four TPC-H queries that missed an earlier
+    # Slots 34-39 = the four TPC-H queries that missed an earlier
     # window, and the two IVM queries whose regressions (_rolling
     # 0.90x, _windowed 0.74x) are still unclassified.
     "tpch_q11",
@@ -9840,7 +9846,7 @@ _PRIORITY: list[str] = [
     "tpch_q16",
     "store_incremental_aggregate_rolling",
     "store_incremental_aggregate_windowed",
-    # Slots 38-50 = the MERGE and table-stream queries the shared
+    # Slots 40-50 = the MERGE and table-stream queries the shared
     # table-log core serves, then the oldest-verified rest.
     "source_delta_merge",
     "source_iceberg_merge",
@@ -9853,8 +9859,6 @@ _PRIORITY: list[str] = [
     "corpus_strip_markup",
     "corpus_temperature_sample",
     "corpus_weighted_reservoir",
-    "embed_prototypicality",
-    "events_anomaly_mad",
 ]
 
 

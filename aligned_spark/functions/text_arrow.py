@@ -7,9 +7,19 @@ through the interpreted path, and measurement at 50k docs put the
 shingle+hash chain at ~0.4 ms/doc of core time (plus a 2× structural
 re-evaluation when the projection is inlined into a Generate node).
 The Arrow kernel below does the same work at ~40 µs/doc single-thread
-(~10×), parallelizes across executor cores via Arrow record batches,
-and — being a separate ``ArrowEvalPython`` stage — forms a natural
-barrier the optimizer cannot inline into downstream operators.
+(~10×) and parallelizes across executor cores via Arrow record batches.
+
+A Python stage is not an inlining barrier by itself: a deterministic
+pandas UDF is copied into any filter pushed below its projection
+(``size(__sig) > 0``, or the one Spark infers for an explode), and
+the plan then runs the kernel in two ``ArrowEvalPython`` nodes. Every
+kernel here is built by :func:`~aligned_spark.functions.arrow_udf.kernel_udf`,
+which marks it nondeterministic so it runs once per row. On the
+``corpus_dedup`` benchmark (8k-doc batches, 4 partitions) that halves
+the Python tasks from 8 to 4 per batch; each task costs ~0.28 s of
+worker CPU before the kernel starts (Spark's per-task
+``importlib.invalidate_caches()``), against ~0.09 s for the MinHash
+kernel itself on a 2k-doc partition.
 
 :data:`ARROW` bundles these kernels as the production
 :class:`~aligned_spark.functions.hash_family.HashFamily`, the default
@@ -41,6 +51,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, LongType
 
+from aligned_spark.functions.arrow_udf import kernel_udf
 from aligned_spark.functions.hash_family import HashFamily
 from aligned_spark.functions.text import _sliding_zip, ws_tokens
 
@@ -59,7 +70,8 @@ def _batch_udf(kernel, return_type, text: Column, *args) -> Column:
     def _kernel(s: pd.Series) -> pd.Series:
         return kernel(s, *args)
 
-    return F.pandas_udf(_kernel, return_type)(text)
+    _kernel.__name__ = kernel.__name__  # names the plan's ArrowEvalPython
+    return kernel_udf(_kernel, return_type)(text)
 
 
 def _flat_token_hashes(
@@ -263,8 +275,7 @@ def corpus_scores_arrow(text: Column) -> Column:
             rows, columns=["pred_lang", "quality", "ws_tokens"]
         )
 
-    udf = F.pandas_udf(_kernel, schema)
-    return udf(text)
+    return kernel_udf(_kernel, schema)(text)
 
 
 def _char_ngram_set(s: str | None, n: int) -> set:
@@ -291,8 +302,7 @@ def ngram_jaccard_arrow(a: Column, b: Column, n: int = 3) -> Column:
             out[i] = len(ga & gb) / union if union else 1.0
         return pd.Series(out, index=sa.index)
 
-    udf = F.pandas_udf(_kernel, "double")
-    return udf(a, b)
+    return kernel_udf(_kernel, "double")(a, b)
 
 
 def rolling_fingerprint_values(

@@ -37,6 +37,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, LongType
 
+from aligned_spark.functions.arrow_udf import kernel_udf
 from aligned_spark.functions.hash_family import HashFamily
 
 # Must stay in sync across the two families AND the SQL
@@ -155,7 +156,8 @@ def _per_doc_udf(fn, return_type, text: Column, *args) -> Column:
     def _kernel(s: pd.Series) -> pd.Series:
         return pd.Series([fn(t, *args) for t in s], index=s.index, dtype=object)
 
-    return F.pandas_udf(_kernel, return_type)(text)
+    _kernel.__name__ = fn.__name__  # names the plan's ArrowEvalPython
+    return kernel_udf(_kernel, return_type)(text)
 
 
 def poly_band_hashes_arrow(

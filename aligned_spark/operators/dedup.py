@@ -121,8 +121,15 @@ def minhash_near_dup_pairs(
 
     The banded frame is persisted (MEMORY_AND_DISK): both sides of
     the self-join read it, and without persistence Spark would run
-    the tokenize+hash pass twice. At corpus scale the banded frame is
-    tiny relative to the corpus (id + 2 longs × bands)."""
+    the tokenize+hash pass once per side. At corpus scale the banded
+    frame is tiny relative to the corpus (id + 2 longs × bands).
+    Persisting does not stop a second evaluation INSIDE the cached
+    plan: the ``size > 0`` filters on the band hashes are pushed below
+    the kernel's projection with the UDF copied in, unless the kernel
+    is nondeterministic, as
+    :func:`~aligned_spark.functions.arrow_udf.kernel_udf` makes it.
+    The verification's shingle kernel is not persisted: it runs once
+    per side of the verification join."""
     from pyspark.storagelevel import StorageLevel
 
     family = hash_family(impl)

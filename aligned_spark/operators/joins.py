@@ -386,8 +386,9 @@ def pit_union_pass(
     kinds (sum/mean/min/max/count), each evaluated over the RANGE frame
     ``[fact_ts - window, fact_ts]`` (``None`` = unbounded). Frames order
     by ``__ord`` alone, a prefix of the as-of sort, so they add one
-    Window per distinct frame and no Sort. ``ttl_seconds`` gates the
-    as-of payload only.
+    Window per distinct frame and no Sort. A feature row with a NULL
+    timestamp falls in no window, and a fact with a NULL timestamp has
+    an empty one. ``ttl_seconds`` gates the as-of payload only.
 
     Output: every fact column (declared types kept), then
     ``__p_<c>`` per payload column, then one column per windowed spec
@@ -405,8 +406,12 @@ def pit_union_pass(
     # carry the feature row as one struct (row atomicity) incl. its ts;
     # each windowed spec's source is materialized as __v_<name> (for
     # count-with-no-column, lit(1) marks "a feature row exists"), NULL
-    # on fact rows, which every streamable aggregate skips
-    values = {f"__v_{a.name}": a._source() for a, _ in windowed}
+    # on fact rows, which every streamable aggregate skips. A NULL-ts
+    # feature row gets NULL too: it falls in no window (a RANGE frame
+    # would put it in every NULL-ts fact's frame and in every unbounded
+    # one), as in the join formulation's `feature_ts <= fact_ts`
+    has_ts = F.col(feature_ts).isNotNull()
+    values = {f"__v_{a.name}": F.when(has_ts, a._source()) for a, _ in windowed}
     if payload_cols:
         values[_PAYLOAD] = F.struct(
             F.col(feature_ts).alias("__ts"),

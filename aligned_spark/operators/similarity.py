@@ -32,6 +32,7 @@ from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, Window as W
 from pyspark.sql import functions as F
 
+from aligned_spark.functions.arrow_udf import kernel_udf
 from aligned_spark.functions.hash_family import hash_family
 
 
@@ -317,7 +318,7 @@ def ivf_assign_to(
             out[ok] = np.argmin(acc, axis=1).astype(np.float64)
         return pd.Series(out)
 
-    fn = F.pandas_udf(_nearest, "double")
+    fn = kernel_udf(_nearest, "double")
     v = F.col(vector_col).cast("array<double>")
     # NULL-element vectors lose the null/NaN distinction crossing
     # Arrow — guard in SQL so they stay NULL (the kernel's value for
@@ -464,7 +465,7 @@ def _pair_cosine_arrow(df: DataFrame, va: str, vb: str) -> Column:
                 out[g] = dot / (np.sqrt(na) * np.sqrt(nb))
         return pd.Series(out)
 
-    fn = F.pandas_udf(_cos, "double")
+    fn = kernel_udf(_cos, "double")
     a = F.col(va).cast("array<double>")
     b = F.col(vb).cast("array<double>")
     # NULL-element vectors lose the null/NaN distinction crossing

@@ -508,15 +508,17 @@ class IcebergSnapshotView:
 #: are immutable uniquely-named content files (exclusive create,
 #: never rewritten), so a parse is valid for the file's lifetime; the
 #: stat in the key guards the one way a path can recur with different
-#: bytes (a table directory re-created at the same path). Bounded so
-#: a long-lived session over many tables stays O(1) memory. At
+#: bytes (a table directory re-created at the same path). Bounded by
+#: the file bytes it holds, so a long-lived session over many tables
+#: stays O(1) memory however large its manifests are. At
 #: warehouse manifest counts this converts the per-call O(files)
 #: driver-side Avro parse of an immutable snapshot into a dict
 #: lookup — every ``_resolve``/CDF snapshot walk after the first
 #: re-reads nothing (locally the parse is ~10 ms; the cache is for
 #: metadata-heavy tables, guide §6).
 _MANIFEST_CACHE: "OrderedDict[tuple, list]" = OrderedDict()
-_MANIFEST_CACHE_MAX = 512
+#: cap on the summed file sizes (the ``size`` of each key) it holds
+_MANIFEST_CACHE_MAX_BYTES = 16 << 20
 
 
 class _FrozenRecord(dict):
@@ -561,8 +563,11 @@ def _read_manifest_cached(path: str) -> list:
         return hit
     records = _freeze(read_container(path)[1])
     _MANIFEST_CACHE[key] = records
-    while len(_MANIFEST_CACHE) > _MANIFEST_CACHE_MAX:
-        _MANIFEST_CACHE.popitem(last=False)
+    held = sum(size for _, size, _ in _MANIFEST_CACHE)
+    # the newest entry stays even when it alone is over the cap
+    while held > _MANIFEST_CACHE_MAX_BYTES and len(_MANIFEST_CACHE) > 1:
+        (_, size, _), _ = _MANIFEST_CACHE.popitem(last=False)
+        held -= size
     return records
 
 

@@ -1806,3 +1806,28 @@ def test_timed_and_chunked_helpers(spark):
 
     with _pytest.raises(ValueError, match="positive"):
         list(chunked(df, 0))
+
+
+@pytest.mark.parametrize("window", [86400, None])
+def test_pit_window_null_ts_feature_rows_fall_in_no_window(spark, window):
+    """A feature row with a NULL timestamp falls in no window, bounded
+    or not, and a fact with a NULL timestamp has an empty window: the
+    streamed pass gives the join formulation's NULL sum and count 0."""
+    from aligned_spark.operators.aggregate import AggSpec, pit_window_aggregate
+
+    t0 = dt.datetime(2024, 1, 10)
+    facts = spark.createDataFrame(
+        [(1, 1, None), (2, 1, t0)], "fid int, k long, ts timestamp"
+    )
+    feats = spark.createDataFrame(
+        [(1, None, 5.0), (2, None, 7.0)], "k long, fts timestamp, v double"
+    )
+    streamed = [AggSpec("s", "sum", "v"), AggSpec("n", "count")]
+    joined = streamed + [AggSpec("m", "median", "v")]
+
+    def run(aggs):
+        out = pit_window_aggregate(facts, feats, ["k"], "ts", "fts", window, aggs)
+        return {r.fid: (r.s, r.n) for r in out.collect()}
+
+    assert run(streamed) == {1: (None, 0), 2: (None, 0)}
+    assert run(joined) == run(streamed)

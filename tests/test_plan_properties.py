@@ -15,6 +15,7 @@ import io
 
 import pytest
 from pyspark.sql import functions as F
+from test_text_arrow import _IMPL_OPERATORS
 
 
 def plan_text(df, mode: str = "formatted") -> str:
@@ -1079,3 +1080,99 @@ def test_cdf_keyless_delete_diff_is_one_aggregate(
     assert [(r.k, r._change_type) for r in cdf.collect()] == [
         (7, "delete")
     ]
+
+
+def _kernel_evaluations(df) -> "Counter[str]":
+    """How many ``ArrowEvalPython`` nodes of ``df``'s physical plan
+    evaluate each Python UDF call, keyed by the call with its input
+    attributes (``minhash_signature_lists(text#1)#2``): one kernel on
+    one input frame. A persisted frame's cached plan is walked once,
+    however many scans read it, so the two sides of a self-join over
+    one cached frame count once."""
+    from collections import Counter
+
+    def seq(s):
+        return [s.apply(i) for i in range(s.size())]
+
+    counts: Counter[str] = Counter()
+    cached: set[str] = set()
+
+    def walk(node):
+        kind = node.getClass().getSimpleName()
+        if kind == "AdaptiveSparkPlanExec":
+            return walk(node.inputPlan())
+        if kind == "InMemoryTableScanExec":
+            plan = node.relation().cachedPlan()
+            if plan.toString() not in cached:
+                cached.add(plan.toString())
+                walk(plan)
+        if kind == "ArrowEvalPythonExec":
+            counts.update(u.toString() for u in seq(node.udfs()))
+        for child in seq(node.children()):
+            walk(child)
+
+    walk(df._jdf.queryExecution().executedPlan())
+    return counts
+
+
+def _assert_each_kernel_once(df):
+    counts = _kernel_evaluations(df)
+    assert counts and set(counts.values()) == {1}, dict(counts)
+    return counts
+
+
+@pytest.mark.parametrize("impl", ["arrow", "poly"])
+@pytest.mark.parametrize("op", sorted(_IMPL_OPERATORS))
+def test_text_kernels_evaluate_once_per_input(spark, tmp_path, op, impl):
+    """Every hash-family operator runs each Arrow kernel in one
+    ``ArrowEvalPython`` node per input frame. A filter on the kernel
+    column (explicit, or the ``size > 0`` Spark infers for an explode)
+    must not be pushed below the projection with the UDF copied in:
+    that second node sends every row to Python twice."""
+    import dataclasses
+
+    from aligned_spark.sources.dedup_index import DedupIndexSource
+
+    docs = spark.createDataFrame(
+        [(1, "a b c d e f g h i j"), (2, "a b c d e f g h i k")],
+        "doc_id long, text string",
+    )
+    out = _IMPL_OPERATORS[op](docs, impl)
+    if isinstance(out, DedupIndexSource):
+        out = dataclasses.replace(out, path=str(tmp_path / "index"))
+        out.overwrite(docs)
+        out = out.filter_new(docs)
+    if (op, impl) == ("remove_duplicate_spans", "arrow"):
+        # the arrow family hashes whitespace windows with xxhash64 in
+        # the JVM: no Python kernel at all
+        assert not _kernel_evaluations(out)
+    else:
+        _assert_each_kernel_once(out)
+
+
+def test_vector_kernels_evaluate_once(spark):
+    """The LSH pair join's Arrow cosine is filtered by the threshold,
+    and the IVF assignment is joined on its cluster column: each kernel
+    still runs in one ``ArrowEvalPython`` node."""
+    from aligned_spark.operators.similarity import (
+        ivf_assign_to,
+        lsh_bucketed_pairs,
+    )
+
+    emb = spark.createDataFrame(
+        [(i, [float(i), 1.0, 0.5]) for i in range(20)],
+        "id long, v array<double>",
+    )
+
+    def kernels(df):
+        return sorted(k.split("(")[0] for k in _assert_each_kernel_once(df))
+
+    assert kernels(lsh_bucketed_pairs(emb, "id", "v", 3, 0.5)) == ["_bk", "_cos"]
+    vecs = [[0.0, 1.0, 0.5], [10.0, 1.0, 0.5]]
+    centers = spark.createDataFrame(
+        list(enumerate(vecs)), "__ivf_cluster int, __cent array<double>"
+    )
+    assigned = ivf_assign_to(emb, "v", vecs).join(
+        F.broadcast(centers), "__ivf_cluster"
+    )
+    assert kernels(assigned) == ["_nearest"]

@@ -161,6 +161,36 @@ def test_manifest_cache_parses_once(spark, tmp_path, monkeypatch):
     assert len(calls) == again
 
 
+def test_manifest_cache_evicts_by_bytes(spark, tmp_path, monkeypatch):
+    """The manifest LRU holds at most ``_MANIFEST_CACHE_MAX_BYTES`` of
+    manifest files: past the cap the least recently used files go
+    first, whatever the entry count."""
+    import aligned_spark.sources.iceberg_log as il
+
+    log = il.IcebergLog(str(tmp_path / "i"))
+    for lo in range(0, 30, 10):
+        log.write(spark.range(lo, lo + 10).selectExpr("id"), mode="append")
+    il._MANIFEST_CACHE.clear()
+    log._resolve()
+    parsed = list(il._MANIFEST_CACHE)
+    sizes = [size for _, size, _ in parsed]
+    assert len(parsed) >= 3 and min(sizes) > 0
+
+    # room for all but the oldest entry
+    cap = sum(sizes) - 1
+    monkeypatch.setattr(il, "_MANIFEST_CACHE_MAX_BYTES", cap)
+    il._MANIFEST_CACHE.clear()
+    log._resolve()
+    assert list(il._MANIFEST_CACHE) == parsed[1:]
+    assert sum(size for _, size, _ in il._MANIFEST_CACHE) <= cap
+
+    # a cap below any one file keeps only the newest
+    monkeypatch.setattr(il, "_MANIFEST_CACHE_MAX_BYTES", 1)
+    il._MANIFEST_CACHE.clear()
+    log._resolve()
+    assert list(il._MANIFEST_CACHE) == parsed[-1:]
+
+
 def test_arrow_cosine_null_guard(spark):
     """NULL / null-element / mismatched-length vectors yield NULL sim
     (the codegen fold's semantics) instead of crashing np.stack in
