@@ -18,21 +18,32 @@ Public surface (see SURVEY.md for the reference parity map):
 - :mod:`aligned_spark.sources` — parquet/csv/delta/in-memory/jdbc connectors
 - :mod:`aligned_spark.streaming` — Structured Streaming port of the
   reference's micro-batch stream worker
+
+The public names below resolve on first use (PEP 562), so importing
+the package, as ``python -m aligned_spark.worker_daemon`` does before
+it chooses the worker's ``sys.path``, imports no ``pyspark``.
 """
 
-from aligned_spark.session import get_spark, stop_spark
-from aligned_spark.types import FeatureType
-from aligned_spark.contracts import feature_view, load_feature, model_contract
-from aligned_spark.store import ContractStore
+from importlib import import_module
 
 __version__ = "0.2.0"
 
-__all__ = [
-    "get_spark",
-    "stop_spark",
-    "FeatureType",
-    "feature_view",
-    "load_feature",
-    "model_contract",
-    "ContractStore",
-]
+_EXPORTS = {
+    "get_spark": "aligned_spark.session",
+    "stop_spark": "aligned_spark.session",
+    "FeatureType": "aligned_spark.types",
+    "feature_view": "aligned_spark.contracts",
+    "load_feature": "aligned_spark.contracts",
+    "model_contract": "aligned_spark.contracts",
+    "ContractStore": "aligned_spark.store",
+}
+
+__all__ = list(_EXPORTS)
+
+
+def __getattr__(name: str):
+    if name not in _EXPORTS:
+        raise AttributeError(f"module {__name__!r} has no attribute {name!r}")
+    value = getattr(import_module(_EXPORTS[name]), name)
+    globals()[name] = value
+    return value

@@ -16,10 +16,13 @@ the plan then runs the kernel in two ``ArrowEvalPython`` nodes. Every
 kernel here is built by :func:`~aligned_spark.functions.arrow_udf.kernel_udf`,
 which marks it nondeterministic so it runs once per row. On the
 ``corpus_dedup`` benchmark (8k-doc batches, 4 partitions) that halves
-the Python tasks from 8 to 4 per batch; each task costs ~0.28 s of
-worker CPU before the kernel starts (Spark's per-task
-``importlib.invalidate_caches()``), against ~0.09 s for the MinHash
-kernel itself on a 2k-doc partition.
+the Python tasks from 8 to 4 per batch. A task cost ~0.28 s of worker
+CPU before the kernel started, against ~0.09 s for the MinHash kernel
+itself on a 2k-doc partition: Spark's per-task
+``importlib.invalidate_caches()`` made every zipimporter over Spark's
+archives (``pyspark.zip`` sub-packages and the ``spark-core`` jar)
+re-read its directory. Workers now import the installed ``pyspark``
+instead (:mod:`aligned_spark.worker_daemon`), which removes that cost.
 
 :data:`ARROW` bundles these kernels as the production
 :class:`~aligned_spark.functions.hash_family.HashFamily`, the default

@@ -115,9 +115,10 @@ def minhash_near_dup_pairs(
 
     Pairs (``{id}_a`` < ``{id}_b``) colliding in at least one band.
     With ``jaccard_threshold`` each candidate is verified with the
-    exact shingle-set Jaccard (only candidates pay this — the
-    verification join carries shingle arrays for the candidate set,
-    not the full corpus).
+    exact shingle-set Jaccard. Only candidates pay this: the shingle
+    kernel runs once per candidate document (the input semi-joined to
+    the pairs' ids), and the verification shuffles shingle arrays of
+    the candidate set, not of the full corpus.
 
     The banded frame is persisted (MEMORY_AND_DISK): both sides of
     the self-join read it, and without persistence Spark would run
@@ -127,9 +128,7 @@ def minhash_near_dup_pairs(
     plan: the ``size > 0`` filters on the band hashes are pushed below
     the kernel's projection with the UDF copied in, unless the kernel
     is nondeterministic, as
-    :func:`~aligned_spark.functions.arrow_udf.kernel_udf` makes it.
-    The verification's shingle kernel is not persisted: it runs once
-    per side of the verification join."""
+    :func:`~aligned_spark.functions.arrow_udf.kernel_udf` makes it."""
     from pyspark.storagelevel import StorageLevel
 
     family = hash_family(impl)
@@ -137,39 +136,38 @@ def minhash_near_dup_pairs(
         df, id_col, text_col, num_hashes, bands, shingle_width, impl
     )
     banded = banded.persist(StorageLevel.MEMORY_AND_DISK)
-    a = banded.select(
-        F.col(id_col).alias(f"{id_col}_a"), "band_id", "band_hash"
-    )
-    b = banded.select(
-        F.col(id_col).alias(f"{id_col}_b"), "band_id", "band_hash"
-    )
+    a, b = f"{id_col}_a", f"{id_col}_b"
     pairs = (
-        a.join(b, on=["band_id", "band_hash"])
-        .filter(F.col(f"{id_col}_a") < F.col(f"{id_col}_b"))
-        .select(f"{id_col}_a", f"{id_col}_b")
+        banded.select(F.col(id_col).alias(a), "band_id", "band_hash")
+        .join(
+            banded.select(F.col(id_col).alias(b), "band_id", "band_hash"),
+            on=["band_id", "band_hash"],
+        )
+        .filter(F.col(a) < F.col(b))
+        .select(a, b)
         .distinct()
     )
     if jaccard_threshold is None:
         return pairs
-    shingled = df.select(
-        F.col(id_col),
+    # one row per pair end: the candidate documents are shingled once
+    # each, and the two ends of a pair meet again in one group
+    ends = pairs.select(a, b, F.explode(F.array(a, b)).alias(id_col))
+    candidates = ends.select(id_col).distinct()
+    shingled = df.join(candidates, on=id_col, how="left_semi").select(
+        id_col,
         # jaccard over shingle-hash sets == jaccard over shingle sets
         # (collisions negligible at 64 bits), at a fraction of the cost
         family.shingle_hashes(F.col(text_col), shingle_width).alias("__sh"),
     )
+
+    def end_hashes(end: str, name: str) -> Column:
+        sh = F.when(F.col(id_col) == F.col(end), F.col("__sh"))
+        return F.first(sh, ignorenulls=True).alias(name)
+
     pairs = (
-        pairs.join(
-            shingled.select(
-                F.col(id_col).alias(f"{id_col}_a"), F.col("__sh").alias("__sh_a")
-            ),
-            on=f"{id_col}_a",
-        )
-        .join(
-            shingled.select(
-                F.col(id_col).alias(f"{id_col}_b"), F.col("__sh").alias("__sh_b")
-            ),
-            on=f"{id_col}_b",
-        )
+        ends.join(shingled, on=id_col)
+        .groupBy(a, b)
+        .agg(end_hashes(a, "__sh_a"), end_hashes(b, "__sh_b"))
     )
     inter = F.size(F.array_intersect("__sh_a", "__sh_b")).cast("double")
     union = F.size(F.array_union("__sh_a", "__sh_b")).cast("double")
@@ -177,7 +175,7 @@ def minhash_near_dup_pairs(
     return (
         pairs.withColumn("jaccard", jac)
         .filter(F.col("jaccard") >= jaccard_threshold)
-        .select(f"{id_col}_a", f"{id_col}_b", "jaccard")
+        .select(a, b, "jaccard")
     )
 
 

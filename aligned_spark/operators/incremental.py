@@ -761,13 +761,15 @@ class IncrementalAggregate(_CursorDomain):
         ).persist()
         # distinct transitions read the aux tables' PRE-state. A
         # scoped persist suffices (the former EAGER localCheckpoint
-        # paid a dedicated job per column) because every use of a
-        # column's transitions happens BEFORE that column's aux table
-        # commits: the merged-probe and the main MERGE materialize
-        # them first, and _commit_aux itself stages from them before
-        # its commit — so even a cache-evicted recompute reads the
-        # aux PRE-state. Do not reorder an aux commit ahead of any
-        # consumer of its own column's transitions.
+        # paid a dedicated job per column): ``aux.read`` pins the
+        # snapshot's file list when the plan is built, and a commit
+        # deletes no file (only vacuum does), so even a cache-evicted
+        # recompute after the aux commit reads the PRE-state. Every
+        # use of a column's transitions also precedes that column's
+        # aux commit (the merged-probe and the main MERGE materialize
+        # them first, _commit_aux stages from them before its
+        # commit); keep it so. test_incremental_agg.py evicts the
+        # cache before each aux commit to check the refresh.
         trans_by_c = {
             c: self._aux_transitions(spark, c, changes).persist()
             for c in self.distincts

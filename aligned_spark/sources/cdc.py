@@ -8,18 +8,19 @@ like 1,000 changed rows). :func:`diff_rewrite` reconstructs the TRUE
 row-level changes by diffing the removed parts' old content against
 the added parts' new content, in ONE shuffle per commit:
 
-- keyed (the merge keys the MERGE commit recorded): one full-outer
-  join on the keys, minus the rows whose values survive unchanged
-  (``__o <=> __n``); one generator then emits each remaining row's
-  change rows — ``update_preimage``/``update_postimage`` when both
-  sides are present, ``delete`` for a vanished key, ``insert`` for a
-  new one;
-- keyless (DELETE/replaceWhere commits): one ``groupBy`` over every
-  column of ``old`` tagged -1 unioned with ``new`` tagged +1, each
-  group's row replicated ``|sum|`` times as ``delete`` (sum < 0) or
-  ``insert`` (sum > 0) — the multiset semantics of ``exceptAll``
-  both ways (NULLs group together) from one aggregate instead of
-  two; updates appear as delete+insert, still exactly-once.
+- keyed (the merge keys a MERGE or replaceWhere commit recorded):
+  one full-outer join on the keys, minus the rows whose values
+  survive unchanged (``__o <=> __n``); one generator then emits each
+  remaining row's change rows — ``update_preimage``/
+  ``update_postimage`` when both sides are present, ``delete`` for a
+  vanished key, ``insert`` for a new one;
+- keyless (DELETE commits, and replaceWhere on a table that never
+  MERGEd): one ``groupBy`` over every column of ``old`` tagged -1
+  unioned with ``new`` tagged +1, each group's row replicated
+  ``|sum|`` times as ``delete`` (sum < 0) or ``insert`` (sum > 0) —
+  the multiset semantics of ``exceptAll`` both ways (NULLs group
+  together) from one aggregate instead of two; updates appear as
+  delete+insert, still exactly-once.
 
 Scale: the join/aggregate runs over ONLY the commit's touched parts
 (the 1-row-MERGE-into-100 TB case reads the handful of rewritten

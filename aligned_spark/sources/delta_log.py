@@ -78,7 +78,7 @@ from aligned_spark.sources.table_log import (  # noqa: F401
 PROTOCOL = {"minReaderVersion": 1, "minWriterVersion": 2}
 _COMMIT_RE = re.compile(r"^(\d{20})\.json$")
 #: table property recording the last MERGE's keys — lets keyless
-#: rewrite commits (DELETE/replaceWhere) take read_cdf's keyed diff
+#: replaceWhere commits take read_cdf's keyed diff
 _MERGE_KEYS_PROP = "aligned.mergeKeys"
 
 # hive null-partition marker, footer-stat harvesting, and part

@@ -71,7 +71,7 @@ _VERSION_RE = re.compile(r"^v(\d+)\.metadata\.json$")
 # set by current_metadata, consumed by commits, never written to disk
 _READ_VERSION_KEY = "__read-version"
 #: table property recording the last MERGE's keys — lets keyless
-#: DELETE snapshots take the CDC keyed-diff path
+#: replaceWhere snapshots take the CDC keyed-diff path
 _MERGE_KEYS_PROP = "aligned.merge-keys"
 
 ADDED, EXISTING, DELETED = 1, 0, 2

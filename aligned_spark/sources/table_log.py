@@ -15,7 +15,8 @@ once for both formats:
 - the (file_path, pos) pair discovery of ``delete_where_mor`` and
   ``merge_upsert_mor``;
 - when a rewrite pre-materializes its change rows, and which merge
-  keys a keyless rewrite records for the keyed change-feed diff;
+  keys a keyless rewrite records for the keyed change-feed diff
+  (replaceWhere rides the last MERGE's; a DELETE records none);
 - the compaction policy (``should_compact``, ``maybe_optimize``,
   ``compact_small``'s selection) and ``optimize``'s layout;
 - CHECK constraints, table properties and bloom-filter pruning.
@@ -167,7 +168,7 @@ class TableLog:
 
     def _recorded_keys(self, snap: Any) -> list[str] | None:
         """Merge keys the table recorded at its last MERGE, for a
-        keyless rewrite commit (DELETE/replaceWhere): the keyed
+        keyless rewrite commit (replaceWhere): the keyed
         full-outer diff emits true update pairs where the whole-row
         aggregate fallback emits delete+insert. Only
         tables that have MERGEd (key discipline established) qualify;
@@ -1028,14 +1029,9 @@ class TableLog:
                 ),
                 cols,
             )
-        return self._commit_rewrite(
-            snap,
-            touched,
-            staged,
-            changes,
-            "delete",
-            self._recorded_keys(snap),
-        )
+        # no merge keys: a DELETE can only delete, and the keyless diff
+        # says so even where the recorded keys repeat within a part
+        return self._commit_rewrite(snap, touched, staged, changes, "delete")
 
     # ------------------------------------------ merge-on-read writes
 

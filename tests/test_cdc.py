@@ -172,10 +172,10 @@ def test_store_changes_since_requires_capable_source(spark, tmp_path):
 # ---------------------------------------------- keyed keyless CDC (r8)
 
 
-def test_delta_delete_after_merge_takes_keyed_diff(spark, tmp_path):
-    """A MERGE records the table's keys as a property; a later
-    DELETE commit (keyless by itself) rides them — its CDF is the
-    keyed full-outer diff, not the 2x-heavier whole-row exceptAll."""
+def test_delta_delete_after_merge_records_no_keys(spark, tmp_path):
+    """A MERGE records the table's keys as a property for later
+    keyless rewrites; a DELETE commit does not ride them (it can only
+    delete), so its CDF is the keyless diff: deletes only."""
     from aligned_spark.sources.delta_log import DeltaLog
 
     log = DeltaLog(str(tmp_path / "t"))
@@ -188,14 +188,43 @@ def test_delta_delete_after_merge_takes_keyed_diff(spark, tmp_path):
     log.merge_upsert(spark.createDataFrame([Row(k=5, v="UPD")]), ["k"])
     v1 = log.latest_version()
     log.delete_where(spark, F.col("k") < 3)
-    # commitInfo carries the recorded keys
     info = [
         a["commitInfo"]
         for a in log._read_commit(log.latest_version())
         if "commitInfo" in a
     ][0]
-    assert info["operationParameters"].get("mergeKeys") == "k"
+    assert "mergeKeys" not in info["operationParameters"]
+    assert log._recorded_keys(log._head()) == ["k"]
     assert _counts(log.read_cdf(spark, v1)) == {"delete": 3}
+
+
+@pytest.mark.parametrize("fmt", ["delta", "iceberg"])
+def test_delete_over_repeated_merge_keys_emits_only_deletes(spark, tmp_path, fmt):
+    """The recorded merge key need not be unique within a part: after
+    a MERGE on ``k`` over rows (1,10), (1,20), (2,30), deleting
+    (1,10) is one delete, not an update of (1,10) into (1,20)."""
+    from aligned_spark.sources.delta_log import DeltaLog
+    from aligned_spark.sources.iceberg_log import IcebergLog
+
+    log = (DeltaLog if fmt == "delta" else IcebergLog)(str(tmp_path / "t"))
+    log.write(
+        spark.createDataFrame(
+            [Row(k=1, v=10), Row(k=1, v=20), Row(k=2, v=30)]
+        ).coalesce(1),
+        "append",
+    )
+    log.merge_upsert(spark.createDataFrame([Row(k=2, v=31)]), ["k"])
+    if fmt == "delta":
+        start = log.latest_version()
+        log.delete_where(spark, F.col("v") == 10)
+        changes = log.read_cdf(spark, start)
+    else:
+        start = log.snapshot_ids()[-1]
+        log.delete_where(spark, F.col("v") == 10)
+        changes = log.read_changes(spark, start)
+    assert [
+        (r["_change_type"], r["k"], r["v"]) for r in changes.collect()
+    ] == [("delete", 1, 10)]
 
 
 def test_delta_replace_where_emits_true_update_pairs(spark, tmp_path):
@@ -263,7 +292,7 @@ def test_delta_delete_without_merge_still_falls_back(spark, tmp_path):
     assert _counts(log.read_cdf(spark, v0)) == {"delete": 4}
 
 
-def test_iceberg_delete_after_merge_takes_keyed_diff(spark, tmp_path):
+def test_iceberg_delete_after_merge_records_no_keys(spark, tmp_path):
     from aligned_spark.sources.iceberg_log import IcebergLog
 
     log = IcebergLog(str(tmp_path / "t"))
@@ -279,14 +308,14 @@ def test_iceberg_delete_after_merge_takes_keyed_diff(spark, tmp_path):
     md = log.current_metadata()
     assert md["properties"].get("aligned.merge-keys") == "k"
     last = md["snapshots"][-1]
-    assert last["summary"].get("merge-keys") == "k"
+    assert "merge-keys" not in last["summary"]
     assert _counts(log.read_changes(spark, s1)) == {"delete": 3}
 
 
-def test_mor_merge_also_records_keys_for_later_deletes(spark, tmp_path):
+def test_mor_merge_also_records_keys_for_later_rewrites(spark, tmp_path):
     """An MOR-only table (never CoW-merged) still hands its keys to
-    later keyless DELETE commits — both write postures record the
-    merge-key property."""
+    later keyless replaceWhere commits — both write postures record
+    the merge-key property."""
     from aligned_spark.sources.delta_log import DeltaLog
 
     log = DeltaLog(str(tmp_path / "t"))
@@ -300,11 +329,16 @@ def test_mor_merge_also_records_keys_for_later_deletes(spark, tmp_path):
         spark.createDataFrame([Row(k=5, v="UPD")]), ["k"]
     )
     v1 = log.latest_version()
-    log.delete_where(spark, F.col("k") < 3)
+    log.replace_where(
+        spark.createDataFrame([Row(k=2, v="NEW")]), F.col("k") == 2
+    )
     info = [
         a["commitInfo"]
         for a in log._read_commit(log.latest_version())
         if "commitInfo" in a
     ][0]
     assert info["operationParameters"].get("mergeKeys") == "k"
-    assert _counts(log.read_cdf(spark, v1)) == {"delete": 3}
+    assert _counts(log.read_cdf(spark, v1)) == {
+        "update_preimage": 1,
+        "update_postimage": 1,
+    }

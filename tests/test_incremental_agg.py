@@ -558,6 +558,56 @@ def test_count_distinct_maintenance(spark, tmp_path):
     assert "b" not in _maintained_cd(spark, agg)
 
 
+def test_count_distinct_survives_cache_eviction_before_aux_commit(
+    spark, tmp_path, monkeypatch
+):
+    """The distinct transitions are persisted, not checkpointed, so
+    a recompute after eviction must still read the aux PRE-state.
+    Evict every cached frame just before each aux commit; the refresh
+    must still equal a direct recompute."""
+    from aligned_spark.operators.incremental import IncrementalAggregate
+    from aligned_spark.sources.delta import DeltaSource
+
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    evicted = []
+    commit_aux = IncrementalAggregate._commit_aux
+
+    def evict_then_commit(self, spark_, *args, **kwargs):
+        evicted.append(not cache.isEmpty())
+        spark_.catalog.clearCache()
+        return commit_aux(self, spark_, *args, **kwargs)
+
+    monkeypatch.setattr(IncrementalAggregate, "_commit_aux", evict_then_commit)
+    src = DeltaSource(path=str(tmp_path / "base"))
+    src.insert(spark.createDataFrame(_rows_u()).coalesce(1))
+    agg = IncrementalAggregate(
+        source=src,
+        target_path=str(tmp_path / "agg"),
+        group_keys=["g"],
+        sums=["x"],
+        distincts=["u"],
+    )
+    agg.refresh(spark)
+    # one slice: a new value, a duplicate, a key moved across groups,
+    # every copy of u=3 in group b and one copy of u=0 in group a
+    src.upsert(
+        spark.createDataFrame(
+            [
+                Row(k=100, g="a", x=0.0, u=99),
+                Row(k=101, g="a", x=0.0, u=0),
+                Row(k=3, g="a", x=3.0, u=77),
+            ]
+        ),
+        keys=["k"],
+    )
+    src.delete_where(
+        spark, (F.col("k") == 4) | ((F.col("g") == "b") & (F.col("u") == 3))
+    )
+    agg.refresh(spark)
+    assert _maintained_cd(spark, agg) == _direct_cd(spark, src)
+    assert any(evicted)
+
+
 def test_count_distinct_aux_lag_recovery(spark, tmp_path):
     """Crash between the main merge and the aux merge: the aux lags
     one slice; the next refresh re-syncs it from CDC before using its

@@ -1082,19 +1082,16 @@ def test_cdf_keyless_delete_diff_is_one_aggregate(
     ]
 
 
-def _kernel_evaluations(df) -> "Counter[str]":
-    """How many ``ArrowEvalPython`` nodes of ``df``'s physical plan
-    evaluate each Python UDF call, keyed by the call with its input
-    attributes (``minhash_signature_lists(text#1)#2``): one kernel on
-    one input frame. A persisted frame's cached plan is walked once,
-    however many scans read it, so the two sides of a self-join over
-    one cached frame count once."""
-    from collections import Counter
+def _arrow_nodes(df) -> list[tuple[list[str], str]]:
+    """``(udf calls, input plan)`` of every ``ArrowEvalPython`` node in
+    ``df``'s physical plan, a call printed with its input attributes
+    (``minhash_signature_lists(text#1)#2``). A persisted frame's cached
+    plan is walked once, however many scans read it."""
 
     def seq(s):
         return [s.apply(i) for i in range(s.size())]
 
-    counts: Counter[str] = Counter()
+    nodes: list[tuple[list[str], str]] = []
     cached: set[str] = set()
 
     def walk(node):
@@ -1107,12 +1104,22 @@ def _kernel_evaluations(df) -> "Counter[str]":
                 cached.add(plan.toString())
                 walk(plan)
         if kind == "ArrowEvalPythonExec":
-            counts.update(u.toString() for u in seq(node.udfs()))
+            calls = [u.toString() for u in seq(node.udfs())]
+            nodes.append((calls, node.child().toString()))
         for child in seq(node.children()):
             walk(child)
 
     walk(df._jdf.queryExecution().executedPlan())
-    return counts
+    return nodes
+
+
+def _kernel_evaluations(df) -> "Counter[str]":
+    """How many ``ArrowEvalPython`` nodes of ``df``'s physical plan
+    evaluate each Python UDF call: one kernel on one input frame. The
+    two sides of a self-join over one cached frame count once."""
+    from collections import Counter
+
+    return Counter(call for calls, _ in _arrow_nodes(df) for call in calls)
 
 
 def _assert_each_kernel_once(df):
@@ -1148,6 +1155,18 @@ def test_text_kernels_evaluate_once_per_input(spark, tmp_path, op, impl):
         assert not _kernel_evaluations(out)
     else:
         _assert_each_kernel_once(out)
+    if op == "minhash_near_dup_pairs":
+        # the jaccard verification shingles each candidate once: one
+        # node for the shingle kernel, over the input semi-joined to
+        # the candidate pairs' ids
+        kernel = {"arrow": "shingle_hash_lists(", "poly": "shingle_set("}[impl]
+        inputs = [
+            plan
+            for calls, plan in _arrow_nodes(out)
+            for call in calls
+            if call.startswith(kernel)
+        ]
+        assert len(inputs) == 1 and "LeftSemi" in inputs[0], inputs
 
 
 def test_vector_kernels_evaluate_once(spark):
